@@ -104,27 +104,13 @@ object Bench {
     // window was quiet.
     var cals = List(calibrate())
     def calMs = cals.min
-    val builder = SparkSession.builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    // r17: the r16 scan-parallelism floor (minPartitionNum = cpus) is
-    // now OPT-IN via SPARK_GRAFT_SCAN_FLOOR. At sf0.1 every table is
-    // ONE single-row-group parquet file: row groups cannot be split,
-    // so the floor scheduled `cpus` reader tasks per scan of which all
-    // but one decoded nothing yet paid task setup + footer read — the
-    // r16 driver bench showed exactly the predicted uniform +0.8-1.0 s
-    // on every single-scan seat (skew_agg 0.27→1.24, window_delta
-    // 0.22→1.12, set_ops 0.32→1.10 …), and the r17 A/B at driver
-    // conditions confirmed it. On multi-row-group/multi-file inputs
-    // (a real cluster) the floor is a no-op whenever splits ≥ cores,
-    // which is why it stays available as a knob rather than deleted.
-    sys.env.get("SPARK_GRAFT_SCAN_FLOOR").filter(_.nonEmpty)
-      .foreach(f => builder.config("spark.sql.files.minPartitionNum",
-        if (f == "cpus") cpus else f))
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM/codegen once so per-query times measure the plan, not JIT.

@@ -83,12 +83,22 @@ object Profile {
       println(f"==== $name%s  wall ${wall}%.2f s  jobs ${jobMap.size}%d  stages ${rows.size}%d ====")
       val totalStageWall = rows.map(_.wallMs).filter(_ > 0).sum / 1000.0
       val totalCpu = rows.map(_.cpuMs).sum / 1000.0
-      val jobWall = jobMap.values.collect { case (s, e) if s > 0 && e > 0 => e - s }.sum / 1000.0
-      println(f"  stage-wall sum ${totalStageWall}%.2f s   job-wall sum ${jobWall}%.2f s   exec cpu ${totalCpu}%.2f s   non-stage (driver/plan/fs) ${wall - jobWall}%.2f s")
+      val jobWall = unionMs(jobMap.values.toSeq) / 1000.0
+      println(f"  stage-wall sum ${totalStageWall}%.2f s   job-wall union ${jobWall}%.2f s   exec cpu ${totalCpu}%.2f s   non-stage (driver/plan/fs) ${wall - jobWall}%.2f s")
       rows.foreach { s =>
         println(f"  job ${s.jobId}%3d stage ${s.stageId}%4d  wall ${s.wallMs / 1000.0}%6.2f s  taskTime ${s.taskMs / 1000.0}%7.2f s  cpu ${s.cpuMs / 1000.0}%7.2f s  in ${s.inputMb}%7.1f MB  sr ${s.shufReadMb}%6.1f MB  sw ${s.shufWriteMb}%6.1f MB  tasks ${s.tasks}%4d  ${s.name}%s")
       }
     }
     spark.stop()
   }
+
+  /** Total time covered by the finished (start, end) intervals, each
+    * instant counted once: AQE runs query stages as concurrent jobs, so
+    * a plain sum of job walls can exceed the query's wall. */
+  private[graft] def unionMs(intervals: Seq[(Long, Long)]): Long =
+    intervals.filter { case (s, e) => s > 0 && e >= s }.sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((total, reach), (s, e)) =>
+        if (e <= reach) (total, reach)
+        else (total + e - math.max(s, reach), e)
+      }._1
 }

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -30,12 +31,16 @@ object Verify {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(", ")}")
     }
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
+      // NonFatal only: an OOM or interrupt must stop the run, not be
+      // logged as one failed query among many
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
+        failed += name
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // per-query caches (tokenized docs, gram arrays, pair stages) are
@@ -45,6 +50,9 @@ object Verify {
     }
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       Verify.oracleJson(only))
+    System.err.println(
+      if (failed.isEmpty) "[verify] 0 queries failed"
+      else s"[verify] ${failed.size} queries failed: ${failed.mkString(", ")}")
     spark.stop()
   }
 

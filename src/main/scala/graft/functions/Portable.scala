@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Helpers that keep query results bit-identical between Spark and the
   * DuckDB oracle the driver replays (SURVEY.md §4).
@@ -54,8 +54,4 @@ object Portable {
     val d = java.security.MessageDigest.getInstance("MD5")
     d.digest(s.getBytes("UTF-8")).map(b => f"$b%02x").mkString
   }
-
-  /** First 6 hex chars of an md5 column as a long in [0, 16^6). */
-  def hex6ToLong(md5Col: Column): Column =
-    conv(substring(md5Col, 1, 6), 16, 10).cast(LongType)
 }

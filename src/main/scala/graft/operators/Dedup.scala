@@ -3,6 +3,7 @@ package graft.operators
 import graft.QueryDef
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Distributed.StageSyntax
 
@@ -45,10 +46,10 @@ object Dedup {
   // generate_series(0, 4095) bound or long docs diverge cross-engine.
   private[operators] val MaxShingleStarts = 4096
   // Hot-bucket cap: an LSH band bucket holding more docs than this is
-  // dropped before the self-join. A boilerplate band shared by f docs
-  // fans out f²/2 candidate pairs — the classic web-scale dedup hot
-  // bucket; past this size the bucket carries no near-dup signal
-  // anyway. Mirrored in the oracle; never fires on the synthetic
+  // dropped before its pairs are generated. A boilerplate band shared
+  // by f docs fans out f²/2 candidate pairs — the classic web-scale
+  // dedup hot bucket; past this size the bucket carries no near-dup
+  // signal anyway. Mirrored in the oracle; never fires on the synthetic
   // corpus (max shingle doc-frequency there is 4), so it's purely the
   // 100 TB guard.
   private[graft] val MaxBucketDocs = 200
@@ -176,7 +177,7 @@ object Dedup {
     * §2.3 "narrower types"). Bijective with the pair, so joins,
     * distincts and counts are unchanged. The ARRAY form above stays
     * for the signature stages that need h1/h2 separately. */
-  private[operators] val shingleKeysTransform: String =
+  private[graft] val shingleKeysTransform: String =
     s"shingle_keys(tk, $ShingleLen, $MaxShingleStarts)"
 
   /** Exploded distinct PACKED shingle keys of a tokenized relation:
@@ -196,13 +197,14 @@ object Dedup {
     *    shingle-set distinct isn't needed here. (The exploded form of
     *    this stage cost a full-corpus shuffle of the ~500×-bigger
     *    shingle relation.)
-    *  - banded LSH candidates: 4 rows/doc, hot buckets capped via a
-    *    broadcast anti-join (an overflowing band bucket fans out
+    *  - banded LSH candidates: 4 rows/doc, paired inside each band
+    *    bucket off ONE band_key shuffle, hot buckets capped by a window
+    *    count ([[bucketPairs]]: an overflowing band bucket fans out
     *    quadratically and carries no near-dup signal).
-    *  - exact-Jaccard verification explodes shingle sets ONLY for docs
-    *    that appear in some candidate pair — a broadcast semi-join
+    *  - exact-Jaccard verification builds one shingle-key array ONLY
+    *    for docs that appear in some candidate pair — a semi-join
     *    filter first, so verify work scales with true duplicate mass,
-    *    not corpus size.
+    *    not corpus size ([[verifiedPairs]]).
     * Shared by dedup_minhash and dedup_clusters. */
   def minhashPairs(spark: SparkSession, dir: String): DataFrame =
     // cached: the signature stage and the verify stage each need the
@@ -214,30 +216,15 @@ object Dedup {
     * owns caching (corpus_keep shares ONE tokenized scan across its
     * dedup, decontamination, and per-row gate pipelines). */
   private[operators] def minhashPairsFrom(tok: DataFrame): DataFrame = {
-    // localCheckpoint (the pareto_class rule): the band-key relation is
-    // the SIGNATURE stage's output (≈500 md5s + 12 minhash folds per
-    // doc — the most compute-dense map stage in the family) and feeds
-    // the hot-key aggregate, the anti-join, and both self-join sides;
-    // uncheckpointed, exchange reuse only covers some branches and the
-    // signatures were observed recomputing per consumer. 4 narrow rows
-    // per doc, so the materialization is small.
-    val bk = bandKeysFrom(tok).stage()
-    // no broadcast hint on the hot-key set: its size is corpus-shaped
-    // (up to N/MaxBucketDocs keys), so AQE picks broadcast while it is
-    // small and falls back to a keyed anti-join when it isn't — an
-    // explicit broadcast() would pin a driver-sized plan at 100 TB
-    val hot = bk.groupBy(col("band_key")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketDocs).select(col("band_key"))
-    val bkc = bk.join(hot, Seq("band_key"), "left_anti")
-
-    // checkpointed too: cand feeds the candidate-doc semi-join (twice,
-    // via the union) and the intersection join — and is duplicate-mass
-    // sized, the cheapest relation in the pipeline to pin
-    val cand = bkc.as("a")
-      .join(bkc.as("b"),
-        col("a.band_key") === col("b.band_key") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
+    // every doc "new": the bucket generator then pairs a.doc_id <
+    // b.doc_id within each capped bucket — the plain LSH self-join.
+    // localCheckpoint (the pareto_class rule): cand is duplicate-mass
+    // sized, the cheapest relation in the pipeline to pin, and the
+    // pin keeps every re-execution of the verified pairs downstream
+    // from repeating the signature stage (≈500 md5s + 12 minhash folds
+    // per doc)
+    val cand = bucketPairs(bandKeysFrom(tok).withColumn("is_new", lit(true)))
+      .select(col("da"), col("db"))
       .stage()
 
     verifiedPairs(cand, tok)
@@ -269,38 +256,66 @@ object Dedup {
     sig.select(col("doc_id"), explode(array(bandKeys: _*)).as("band_key"))
   }
 
-  /** Exact-Jaccard verification of candidate `(da, db)` pairs over a
-    * tokenized doc relation: shingle sets are exploded ONLY for docs
-    * that appear in some pair, so verify work scales with the true
-    * duplicate mass, not the corpus. Returns (da, db, n_common,
-    * jaccard) filtered to jaccard >= [[JaccardThreshold]]. */
-  private def verifiedPairs(cand: DataFrame, tok: DataFrame): DataFrame = {
-    // candidate docs scale with the DUPLICATE MASS, not a constant:
-    // like the hot-key set above, the semi-join is left to AQE
-    // (broadcast while sparse, keyed when a dup-heavy corpus makes
-    // the candidate set corpus-sized)
-    val candDocs = cand.select(col("da").as("doc_id"))
-      .unionByName(cand.select(col("db").as("doc_id"))).distinct()
-    val shc = shingleKeySet(tok.join(candDocs, Seq("doc_id"), "left_semi"))
-      .cache()
-    val ns = shc.groupBy("doc_id").agg(count(lit(1)).as("n"))
+  /** Candidate pairs of a (doc_id, band_key, is_new) key relation from
+    * ONE band_key shuffle: a window count over each bucket applies the
+    * [[MaxBucketDocs]] hot-bucket cap (an overflowing bucket fans out
+    * quadratically and carries no near-dup signal) before any bucket is
+    * collected; each surviving bucket then collects its members and
+    * emits its (a, b) pairs in one generator — b new, a indexed or an
+    * earlier new doc (arrival order). Returns (da, db, da_is_new), the
+    * partner's provenance bit riding along from the same is_new the
+    * pair predicate read; a pair sharing several bands appears once per
+    * band ([[verifiedPairs]] groups by pair, so it is scored once).
+    * With every row new this is the plain a.doc_id < b.doc_id LSH
+    * self-join. */
+  private def bucketPairs(keys: DataFrame): DataFrame =
+    keys
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("band_key"))))
+      .filter(col("n") <= MaxBucketDocs)
+      .groupBy(col("band_key"))
+      .agg(collect_list(struct(col("doc_id"), col("is_new"))).as("m"))
+      .select(explode(expr(
+        """flatten(transform(filter(m, b -> b.is_new), b ->
+          |  transform(filter(m, a -> NOT a.is_new OR a.doc_id < b.doc_id),
+          |    a -> struct(a.doc_id AS da, b.doc_id AS db, a.is_new AS da_is_new))))"""
+          .stripMargin)).as("p"))
+      .select(col("p.da"), col("p.db"), col("p.da_is_new"))
 
-    val inter = cand
-      .join(shc.as("sa"), col("sa.doc_id") === col("da"))
-      .join(shc.as("sb"),
-        col("sb.doc_id") === col("db") && col("sb.w") === col("sa.w"))
-      .groupBy(col("da"), col("db"))
-      .agg(count(lit(1)).as("n_common"))
-
-    val jac = col("n_common").cast("double") /
-      (col("na.n") + col("nb.n") - col("n_common"))
-    inter
-      .join(ns.as("na"), col("na.doc_id") === col("da"))
-      .join(ns.as("nb"), col("nb.doc_id") === col("db"))
-      .filter(jac >= JaccardThreshold)
-      .select(col("da"), col("db"),
-        col("n_common").cast("long").as("n_common"),
-        graft.functions.Portable.quant6(jac).as("jaccard"))
+  /** Exact-Jaccard verification of candidate `(da, db, …)` pairs over
+    * a tokenized doc relation. The pair relation is read ONCE: each
+    * pair fans out to its two docs, each candidate doc collects its
+    * pairs and joins its tokens, its distinct packed shingle keys
+    * (`array_distinct(shingle_keys(…))`) are computed once for the doc,
+    * and the pairs regroup with both docs' arrays to be scored by
+    * `size(array_intersect(…))` — the same integers as exploding the
+    * shingle sets, self-joining them per pair and counting, without the
+    * shingle-row shuffles, and one plan copy of the candidate generator
+    * instead of one per consumer (planning, not execution, was the
+    * cost of the copies). Verify work scales with the true duplicate
+    * mass, not the corpus; the tok join is left to AQE (broadcast while
+    * sparse, keyed when a dup-heavy corpus makes the candidate set
+    * corpus-sized). A pair whose doc is missing from `tok` drops, as
+    * under an inner join. Returns cand's columns plus n_common and
+    * jaccard, one row per distinct pair (duplicate cand rows collapse
+    * in the regroup), filtered to jaccard >= [[JaccardThreshold]]. */
+  private[graft] def verifiedPairs(cand: DataFrame, tok: DataFrame): DataFrame = {
+    val cols = cand.columns.toSeq
+    def keysOf(side: String) = max(when(col("doc_id") === col(s"p.$side"), col("w")))
+    val scored = cand
+      .select(struct(cols.map(col): _*).as("p"), explode(array(col("da"), col("db"))).as("doc_id"))
+      .groupBy(col("doc_id")).agg(collect_list(col("p")).as("ps"))
+      .join(tok, Seq("doc_id"))
+      // the key array is computed per DOC, before fanning out to its pairs
+      .select(col("doc_id"), col("ps"), array_distinct(expr(shingleKeysTransform)).as("w"))
+      .select(col("doc_id"), explode(col("ps")).as("p"), col("w"))
+      .groupBy(col("p")).agg(keysOf("da").as("wa"), keysOf("db").as("wb"))
+    val nCommon = size(array_intersect(col("wa"), col("wb")))
+    val jac = nCommon.cast("double") / (size(col("wa")) + size(col("wb")) - nCommon)
+    scored
+      .filter(col("wa").isNotNull && col("wb").isNotNull && jac >= JaccardThreshold)
+      .select(cols.map(c => col(s"p.$c")) ++ Seq(
+        nCommon.cast("long").as("n_common"),
+        graft.functions.Portable.quant6(jac).as("jaccard")): _*)
   }
 
   // ---- L2c: incremental near-dedup (delta batch vs screened corpus) ----
@@ -341,75 +356,52 @@ object Dedup {
     * build/serve split as [[graft.operators.Similarity.buildIvfIndex]]
     * and the warehouse's bucketed tables. */
   def buildDedupIndex(docs: DataFrame, path: String): Unit =
-    bandKeysFrom(tokenized(docs.select(col("doc_id"), col("text"))))
-      // output-sizing exchange (r17): the signature COMPUTE above runs
-      // at the pinned tokenized parallelism, but the index payload is
-      // 4 narrow rows/doc — written straight off the compute stage it
-      // lands as one near-empty file per task, and every later serving
-      // read pays listing/footer overhead per file. The unpinned
-      // repartition lets AQE size the output by bytes (the write-side
-      // twin of guide §6 "aim for output files in the 128 MB-1 GB
-      // range"); band_key is the downstream join key, costless to
-      // cluster by while the rows move anyway.
-      .repartition(col("band_key"))
-      .write.mode("overwrite").parquet(path)
+    writeIndex(bandKeysFrom(tokenized(docs.select(col("doc_id"), col("text")))), path)
 
-  /** Screen a DELTA batch for near-duplicates of (a) the indexed
-    * corpus and (b) earlier docs within the delta itself, WITHOUT
-    * re-signaturing the corpus. `oldKeys` is the persisted index
-    * relation (doc_id, band_key); `tokAll` must cover every doc that
-    * can appear in a candidate pair (old + delta) because the exact-
-    * Jaccard verify re-tokenizes CANDIDATE docs only — that re-read is
-    * duplicate-mass-sized, never corpus-sized. Returns verified pairs
-    * (da = the earlier partner, db = the delta doc). */
+  /** Write a (doc_id, band_key) relation as an index partition.
+    * Output-sizing exchange (r17): the signature COMPUTE runs at the
+    * pinned tokenized parallelism, but the index payload is 4 narrow
+    * rows/doc — written straight off the compute stage it lands as one
+    * near-empty file per task, and every later serving read pays
+    * listing/footer overhead per file. The unpinned repartition lets
+    * AQE size the output by bytes (the write-side twin of guide §6 "aim
+    * for output files in the 128 MB-1 GB range"); band_key is the
+    * downstream join key, costless to cluster by while the rows move
+    * anyway. */
+  private[graft] def writeIndex(keys: DataFrame, path: String): Unit =
+    keys.repartition(col("band_key")).write.mode("overwrite").parquet(path)
+
+  /** Sign a DELTA batch once: its (doc_id, band_key) LSH keys, staged
+    * (localCheckpoint — DeltaSample-scale, 4 rows per doc). The staged
+    * relation serves both the screen ([[screenDelta]]) and, minus the
+    * duplicates, the delta's own index partition, so no doc is
+    * tokenized and minhashed twice. Bounded input, so the
+    * AQE-coalescable `spread = false` tokenization. */
+  def signDelta(delta: DataFrame): DataFrame =
+    bandKeysFrom(tokenized(delta.select(col("doc_id"), col("text")), spread = false)).stage()
+
+  /** Candidate pairs of a signed delta against the indexed corpus and
+    * its own earlier docs, verified: `oldKeys` is the persisted index
+    * relation (doc_id, band_key), `newKeys` the staged delta keys
+    * ([[signDelta]]), both screened in one [[bucketPairs]] pass — the
+    * hot-bucket cap counts over the COMBINED key set, so the incremental
+    * run prunes exactly the buckets the full-corpus pipeline would.
+    * `tokAll` must cover every doc that can appear in a candidate pair
+    * (old + delta) because the exact-Jaccard verify re-tokenizes
+    * CANDIDATE docs only — a duplicate-mass-sized re-read, never
+    * corpus-sized. The candidate set stays UNSTAGED — the verify reads
+    * it once, so its plan is planned once, and the index parquet scan
+    * stays visible in the final plan: the evidence DedupIncrementalSpec
+    * pins that the corpus is never re-signatured on the incremental
+    * path. Returns verified (da, db, da_is_new, n_common, jaccard) —
+    * da the earlier partner, db the delta doc, da_is_new the partner's
+    * delta-vs-indexed provenance. */
   private[operators] def incrementalPairs(
-      oldKeys: DataFrame, tokAll: DataFrame, tokDelta: DataFrame): DataFrame = {
-    // staged (localCheckpoint): the delta band-key chain (TakeOrdered
-    // sample → broadcast semi → tokenize → signatures) is referenced
-    // once per copy of `allc`'s plan, and the verify stage references
-    // allc combinatorially (sa/sb × candDocs × pair sides) — without
-    // the cut the STATIC plan held ~60 copies of the TakeOrdered and
-    // ~120 broadcasts, and Catalyst planning (driver-side, invisible
-    // to task CPU) dominated the seat's wall time. 4 band keys ×
-    // DeltaSample rows — the checkpoint is trivially small.
-    val newKeys = bandKeysFrom(tokDelta).stage()
-    // the hot-bucket cap counts over the COMBINED key set so the
-    // incremental run prunes exactly the buckets the full-corpus
-    // pipeline would — the pair sets stay mutually consistent
-    val all = oldKeys.withColumn("is_new", lit(false))
-      .unionByName(newKeys.withColumn("is_new", lit(true)))
-    val hot = all.groupBy(col("band_key")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > MaxBucketDocs).select(col("band_key"))
-    val allc = all.join(hot, Seq("band_key"), "left_anti").cache()
-    val newc = allc.filter(col("is_new"))
-    // partner eligibility = arrival order: every indexed doc precedes
-    // the delta; within the delta, doc_id order. The join stays keyed
-    // on band_key — the predicate only directs the pair.
-    val cand = allc.as("a")
-      .join(newc.as("b"),
-        col("a.band_key") === col("b.band_key") &&
-          (!col("a.is_new") || col("a.doc_id") < col("b.doc_id")))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-      // staged like minhashPairsFrom's cand: the verify stage
-      // references the candidate set through sa/sb/ns × candDocs, so
-      // an uncut lineage duplicates the whole join subtree ~8× in the
-      // plan (pure Catalyst planning cost — the cached allc already
-      // dedups EXECUTION). The index parquet scan stays visible in the
-      // final plan through the `flags` branch below, which is the
-      // evidence DedupIncrementalSpec pins to prove the corpus is
-      // never re-signatured on the incremental path.
-      .stage()
-    // The partner's indexed-vs-delta provenance rides along as
-    // `da_is_new` (from the SAME is_new bit the pair predicate used):
-    // the verdict's "indexed partner first" rule needs the real flag,
-    // not a shadow of the oracle harness's synthetic deltaIds sample —
-    // screenDelta serves arbitrary deltas whose ids carry no such
-    // structure
-    val flags = allc.select(col("doc_id").as("da"), col("is_new").as("da_is_new"))
-      .distinct()
-    verifiedPairs(cand, tokAll).join(flags, "da")
-  }
+      oldKeys: DataFrame, tokAll: DataFrame, newKeys: DataFrame): DataFrame =
+    verifiedPairs(
+      bucketPairs(oldKeys.select(col("doc_id"), col("band_key"), lit(false).as("is_new"))
+        .unionByName(newKeys.select(col("doc_id"), col("band_key"), lit(true).as("is_new")))),
+      tokAll)
 
   /** The delta verdict, one row per duplicate delta doc: its chosen
     * earlier partner (indexed docs first — by the pair relation's own
@@ -441,8 +433,7 @@ object Dedup {
     // shuffle anywhere in the serving path
     incrementalVerdict(incrementalPairs(
       spark.read.parquet(indexPath), tokenizedAtScan(docs),
-      tokenized(docs.join(broadcast(deltaIds(docs)), Seq("doc_id"), "left_semi"),
-        spread = false)))
+      signDelta(docs.join(broadcast(deltaIds(docs)), Seq("doc_id"), "left_semi"))))
   }
 
   /** Public delta-screening entry (the continuous-ingestion building
@@ -451,13 +442,23 @@ object Dedup {
     * delta doc (arrival order = doc_id within the delta). `oldKeys`
     * is the persisted (doc_id, band_key) index; `corpus` must hold
     * the indexed docs' (doc_id, text) — only candidate docs' text is
-    * ever read from it (the semi-join prunes the rest). */
-  def screenDelta(oldKeys: DataFrame, corpus: DataFrame, delta: DataFrame): DataFrame = {
-    val d = delta.select(col("doc_id"), col("text"))
+    * ever read from it (the semi-join prunes the rest). Signs the
+    * delta itself; see the four-argument form to reuse the keys. */
+  def screenDelta(oldKeys: DataFrame, corpus: DataFrame, delta: DataFrame): DataFrame =
+    screenDelta(oldKeys, corpus, delta, signDelta(delta))
+
+  /** [[screenDelta]] over delta keys the caller already signed with
+    * [[signDelta]] — so an ingest batch can write the same staged keys,
+    * minus its duplicates, as its index partition. One signature pass,
+    * one band_key shuffle for the candidates, one array row per
+    * candidate doc for the verify. */
+  def screenDelta(oldKeys: DataFrame, corpus: DataFrame, delta: DataFrame,
+      deltaKeys: DataFrame): DataFrame = {
     // scan-speed verify side (see tokenizedAtScan): only candidate
     // docs' text is ever tokenized from the corpus
-    val tokAll = tokenizedAtScan(corpus.select(col("doc_id"), col("text")).unionByName(d))
-    incrementalVerdict(incrementalPairs(oldKeys, tokAll, tokenized(d, spread = false)))
+    val tokAll = tokenizedAtScan(corpus.select(col("doc_id"), col("text"))
+      .unionByName(delta.select(col("doc_id"), col("text"))))
+    incrementalVerdict(incrementalPairs(oldKeys, tokAll, deltaKeys))
   }
 
   /** Resolve verified pairs into duplicate clusters by iterative

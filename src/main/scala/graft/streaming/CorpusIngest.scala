@@ -1,9 +1,10 @@
 package graft.streaming
 
 import graft.operators.Dedup
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Continuous corpus ingestion with ONLINE near-dedup — the streaming
   * closure of the L2c incremental-dedup loop: every micro-batch of
@@ -38,36 +39,48 @@ object CorpusIngest {
 
   /** Apply one micro-batch to the dedup state — deterministic and
     * idempotent per (batch rows, batchId). Public so a batch backfill
-    * can drive the exact same code path as the stream. */
+    * can drive the exact same code path as the stream.
+    *
+    * Each batch is signed ONCE: [[graft.operators.Dedup.signDelta]]
+    * stages the delta's band keys, [[graft.operators.Dedup.screenDelta]]
+    * screens them against the prior index (one band_key shuffle for
+    * candidates, one shingle-key array per candidate doc for the
+    * verify), and the same staged keys minus the duplicates become
+    * `index/batch_id=N` — row-identical to a
+    * [[graft.operators.Dedup.buildDedupIndex]] of `corpus/batch_id=N`
+    * (spec-asserted), without re-reading and re-signing it. Engine-owned
+    * state is read with the schema the engine wrote, so no read pays a
+    * parquet schema-inference job, and nothing is cached: the only
+    * materialization is the delta keys' localCheckpoint, which Spark's
+    * cleaner frees once the batch drops it. */
   def ingestBatch(batch: DataFrame, batchId: Long, statePath: String): Unit = {
     val spark = batch.sparkSession
     val docs = batch.select(col("doc_id"), col("text"))
 
-    def priorState(sub: String, schemaOf: DataFrame): DataFrame = {
+    def priorState(sub: String, schema: StructType): DataFrame = {
       val root = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(root))
-        spark.read.parquet(root.toString)
+        spark.read.schema(schema.add("batch_id", LongType)).parquet(root.toString)
           .filter(col("batch_id") < batchId).drop("batch_id")
-      else schemaOf.limit(0)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     }
 
-    val emptyDocs = docs.limit(0)
-    val corpus = priorState("corpus", emptyDocs)
+    val corpus = priorState("corpus", docs.schema)
     val oldKeys = priorState("index",
-      emptyDocs.select(col("doc_id"), lit("").as("band_key")))
+      StructType(Seq(docs.schema("doc_id"), StructField("band_key", StringType))))
 
-    val dups = Dedup.screenDelta(oldKeys, corpus, docs)
-    dups.write.mode("overwrite").parquet(s"$statePath/dups/batch_id=$batchId")
+    val keys = Dedup.signDelta(docs)
+    val dups = Dedup.screenDelta(oldKeys, corpus, docs, keys)
+    val dupsPath = s"$statePath/dups/batch_id=$batchId"
+    dups.write.mode("overwrite").parquet(dupsPath)
 
-    val novel = docs.join(
-      spark.read.parquet(s"$statePath/dups/batch_id=$batchId").select(col("doc_id")),
-      Seq("doc_id"), "left_anti")
-    novel.write.mode("overwrite").parquet(s"$statePath/corpus/batch_id=$batchId")
-    // index keys come off the MATERIALIZED corpus partition (one read
-    // of batch-sized output) rather than re-running the novel plan
-    Dedup.buildDedupIndex(
-      spark.read.parquet(s"$statePath/corpus/batch_id=$batchId"),
+    // the verdict is read back from its own materialized partition
+    // (never re-planned) for both anti-joins below
+    val dupIds = spark.read.schema(dups.schema).parquet(dupsPath).select(col("doc_id"))
+    docs.join(dupIds, Seq("doc_id"), "left_anti")
+      .write.mode("overwrite").parquet(s"$statePath/corpus/batch_id=$batchId")
+    Dedup.writeIndex(keys.join(dupIds, Seq("doc_id"), "left_anti"),
       s"$statePath/index/batch_id=$batchId")
   }
 

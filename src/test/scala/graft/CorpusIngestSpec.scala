@@ -402,4 +402,29 @@ class CorpusIngestSpec extends SparkSuite {
     assert(readState(st, "corpus").select("doc_id")
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 7L))
   }
+
+  test("each batch's index partition equals buildDedupIndex of its corpus partition; batches cache nothing") {
+    val st = state()
+    def cached() = org.apache.spark.sql.CachedDataProbe.entries(spark)
+    val cachedBefore = cached()
+    // within-batch copy (5 of 2), cross-batch copies (6 of 1, 8 of 3)
+    val batches = Seq(
+      Seq(1L -> texts(1), 2L -> texts(2), 5L -> texts(2)),
+      Seq(3L -> texts(3), 6L -> texts(1)),
+      Seq(4L -> texts(4), 7L -> texts(7), 8L -> texts(3)))
+    def keyRows(path: String) = spark.read.parquet(path).select("doc_id", "band_key")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+    batches.zipWithIndex.foreach { case (rows, n) =>
+      CorpusIngest.ingestBatch(docsDf(rows: _*), n.toLong, st)
+      val ref = s"${state()}/index"
+      graft.operators.Dedup.buildDedupIndex(spark.read.parquet(s"$st/corpus/batch_id=$n"), ref)
+      val got = keyRows(s"$st/index/batch_id=$n")
+      assert(got.nonEmpty)
+      assert(got === keyRows(ref), s"batch $n index rows differ from buildDedupIndex")
+    }
+    assert(readState(st, "dups").select("doc_id").collect().map(_.getLong(0)).toSet ===
+      Set(5L, 6L, 8L))
+    assert(cached() === cachedBefore,
+      "ingestBatch must leave no entries in the session's cached-data registry")
+  }
 }
