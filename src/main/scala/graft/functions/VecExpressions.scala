@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -247,14 +248,6 @@ object VecExpressions {
     * re-registering them here makes the pair usable from expr() for
     * the decontamination bloom pre-filter. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_cosine", exprs => VecCosine(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_i8", exprs => VecDotI8(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_words", exprs => Md5Words(exprs(0)), "built-in")
     // shingle-family fused forms (r16 optimization): trailing args are
     // required to be foldable integer literals — they parameterize the
     // generated code, not the data path
@@ -266,24 +259,25 @@ object VecExpressions {
       require(e.foldable, s"expected a literal long argument, got $e")
       e.eval().asInstanceOf[Number].longValue
     }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_words",
-      exprs => ShingleWords(exprs(0), litInt(exprs(1)), litInt(exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_keys",
-      exprs => ShingleKeys(exprs(0), litInt(exprs(1)), litInt(exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => MinhashSigs(exprs(0), litInt(exprs(1)), litLong(exprs(2))), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_filter_agg",
-      exprs => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        exprs(0)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        exprs(0), exprs(1)),
-      "built-in")
+    val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+      "vec_dot" -> (exprs => VecDot(exprs(0), exprs(1))),
+      "vec_cosine" -> (exprs => VecCosine(exprs(0), exprs(1))),
+      "vec_dot_i8" -> (exprs => VecDotI8(exprs(0), exprs(1))),
+      "md5_words" -> (exprs => Md5Words(exprs(0))),
+      "shingle_words" -> (exprs => ShingleWords(exprs(0), litInt(exprs(1)), litInt(exprs(2)))),
+      "shingle_keys" -> (exprs => ShingleKeys(exprs(0), litInt(exprs(1)), litInt(exprs(2)))),
+      "minhash_sigs" -> (exprs => MinhashSigs(exprs(0), litInt(exprs(1)), litLong(exprs(2)))),
+      "bloom_filter_agg" -> (exprs =>
+        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(exprs(0))),
+      "might_contain" -> (exprs =>
+        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1))))
+    // once per session: a name already in the registry (an earlier
+    // call, or GraftExtensions) is kept — replacing it on every query
+    // logged a "replaced a previously registered function" warning
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (name, build) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

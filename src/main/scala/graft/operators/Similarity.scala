@@ -7,6 +7,7 @@ import graft.sources.{Tables, Warehouse}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.operators.Distributed.StageSyntax
 
 /** Embedding-space operators over `embeddings` (SURVEY.md §2.3 L5–L7):
@@ -839,11 +840,11 @@ object Similarity {
   def ivfSq8Search(
       emb: DataFrame, cent: DataFrame, queries: DataFrame,
       nProbes: Int = SqNumProbes, excludeSelf: Boolean = true): DataFrame =
-    // stage the N×K assignment (the pareto_class rule): the search and
-    // its in-plan recall gate both consume the cell table, and the
-    // assignment feeds a broadcast join (no exchange boundary), so
-    // without the cut it would be computed once per branch
-    sq8SearchCells(quantizedCells(emb, cent).stage(), emb, cent, queries,
+    // not staged: the cell table has one consumer, and the recall
+    // gate's branch reuses the search's coarse exchange, so the N×K
+    // assignment runs once per execution (final plan: one max_by
+    // aggregate)
+    sq8SearchCells(quantizedCells(emb, cent), emb, cent, queries,
       nProbes, excludeSelf)
 
   /** Each corpus row's (cell, int8 vector) in ONE scan and ONE
@@ -878,15 +879,6 @@ object Similarity {
   private def sq8SearchCells(
       cellTable: DataFrame, emb: DataFrame, cent: DataFrame,
       queries: DataFrame, nProbes: Int, excludeSelf: Boolean,
-      rerankK: Int = SqRerankK): DataFrame =
-    gateSampledRecall(
-      sq8SearchCellsRaw(cellTable, emb, cent, queries, nProbes, excludeSelf, rerankK),
-      emb, queries, excludeSelf, "ann_ivf_sq8", SqGateFloor)(
-      s => sq8SearchCellsRaw(cellTable, emb, cent, s, nProbes, excludeSelf, rerankK))
-
-  private def sq8SearchCellsRaw(
-      cellTable: DataFrame, emb: DataFrame, cent: DataFrame,
-      queries: DataFrame, nProbes: Int, excludeSelf: Boolean,
       rerankK: Int = SqRerankK): DataFrame = {
     val cells = cellTable.withColumn("__cs",
       pmod(col("nid"), lit(CellSalt)).cast("int"))
@@ -897,9 +889,27 @@ object Similarity {
     val coarse = dropSelf(cells.join(probes, Seq("cid", "__cs")), excludeSelf, "qid", "nid")
       .select(col("qid"), col("nid"),
         call_function("vec_dot_i8", col("nv8"), col("qq8")).as("cscore"))
-    rerank(saltedTopK(coarse, col("cscore"), rerankK).select(col("qid"), col("nid")),
-      emb, queries)
+    gateSampledRecall(
+      rerank(saltedTopK(coarse, col("cscore"), rerankK).select(col("qid"), col("nid")),
+        emb, queries),
+      emb, queries, excludeSelf, "ann_ivf_sq8", SqGateFloor)
   }
+
+  /** Written schemas of the persisted index tables (these two and the
+    * PQ ones beside [[buildPqIndex]] / [[buildIvfPqIndex]]): ONE
+    * definition per table, shared by its writer ([[indexRows]]) and
+    * every reader (`spark.read.schema`), so a typed read runs no
+    * parquet schema-inference job. `cid` is the cells' partition column —
+    * declared, it reads back as the bigint the writer wrote, not an
+    * inferred int. */
+  private[graft] val CentroidsSchema = StructType(Seq(
+    StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
+  private[graft] val Sq8CellsSchema = StructType(Seq(StructField("nid", LongType),
+    StructField("nv8", ArrayType(ByteType)), StructField("cid", LongType)))
+
+  /** `df` as exactly the columns (order and types) of `schema`. */
+  private def indexRows(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.map(f => col(f.name).cast(f.dataType)): _*)
 
   /** BUILD-ONCE lifecycle for the inverted file: persist the
     * assignment + quantized vectors as a parquet table PARTITIONED BY
@@ -955,16 +965,15 @@ object Similarity {
         refineCentroidsTwoLevel(emb, cent, fineK, coarseK, refineIters)
       case _ => cent
     }
-    cFinal.write.mode("overwrite").parquet(s"$path/centroids")
-    val centR = emb.sparkSession.read.parquet(s"$path/centroids")
+    indexRows(cFinal, CentroidsSchema).write.mode("overwrite").parquet(s"$path/centroids")
+    val centR = emb.sparkSession.read.schema(CentroidsSchema).parquet(s"$path/centroids")
     val cells = twoLevel match {
       case Some((fineK, coarseK)) =>
         assignTwoLevel(emb, centR, fineK, coarseK)
           .select(col("vec_id").as("nid"), quantizeExpr(col("v")).as("nv8"), col("cid"))
       case None => quantizedCells(emb, centR)
     }
-    cells
-      .select(col("nid"), col("nv8"), col("cid"))
+    indexRows(cells, Sq8CellsSchema)
       .repartition(col("cid"))
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/cells")
   }
@@ -982,7 +991,8 @@ object Similarity {
     * only when drift erodes the measured recall (dev/recall.sh). */
   def appendToIvfIndex(spark: SparkSession, embDelta: DataFrame, path: String): Unit = {
     ensureRegistered(spark)
-    appendToIvfIndex(spark, embDelta, path, spark.read.parquet(s"$path/centroids"))
+    appendToIvfIndex(spark, embDelta, path,
+      spark.read.schema(CentroidsSchema).parquet(s"$path/centroids"))
   }
 
   /** Same, against a caller-provided centroid relation — the r16
@@ -995,8 +1005,7 @@ object Similarity {
   def appendToIvfIndex(spark: SparkSession, embDelta: DataFrame, path: String,
       cent: DataFrame): Unit = {
     ensureRegistered(spark)
-    quantizedCells(embDelta, cent)
-      .select(col("nid"), col("nv8"), col("cid"))
+    indexRows(quantizedCells(embDelta, cent), Sq8CellsSchema)
       .repartition(col("cid")) // one delta file per touched cell, as at build
       .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
   }
@@ -1011,8 +1020,8 @@ object Similarity {
       nProbes: Int = SqNumProbes, excludeSelf: Boolean = true,
       rerankK: Int = SqRerankK): DataFrame = {
     ensureRegistered(spark)
-    val cent = spark.read.parquet(s"$path/centroids")
-    sq8SearchCells(spark.read.parquet(s"$path/cells"), emb, cent, queries,
+    sq8SearchCells(spark.read.schema(Sq8CellsSchema).parquet(s"$path/cells"), emb,
+      spark.read.schema(CentroidsSchema).parquet(s"$path/centroids"), queries,
       nProbes, excludeSelf, rerankK)
   }
 
@@ -1066,10 +1075,10 @@ object Similarity {
     // codebook = the seedCentroids sample (pqBook's "" key reproduces
     // md5(vec_id) order); encode + per-query ADC table + the coarse
     // 8-lookup fixed-order score, shared with the IVF×PQ composition.
-    // The N-row encode is staged: the search and its in-plan recall
-    // gate both scan it across a broadcast join (no exchange to reuse)
+    // The N-row encode is not staged: the recall gate's branch reuses
+    // the search's coarse exchange, so it runs once per execution
     val book = pqBook(emb, "")
-    pqSearchFrom(pqEncode(emb, book).stage(), book, emb, queries,
+    pqSearchFrom(pqEncode(emb, book), book, emb, queries,
       broadcastQueries, excludeSelf)
   }
 
@@ -1079,15 +1088,20 @@ object Similarity {
     * the two can never drift on scoring, rerank, or the recall gate. */
   private def pqSearchFrom(enc: DataFrame, book: DataFrame, emb: DataFrame,
       queries: DataFrame, broadcastQueries: Boolean, excludeSelf: Boolean): DataFrame = {
-    def raw(q: DataFrame): DataFrame = {
-      val qt = pqTable(q, book)
-      val coarse = dropSelf(pairQueries(enc, qt, broadcastQueries), excludeSelf, "qid", "vec_id")
-        .select(col("qid"), col("vec_id").as("nid"), adcScore.as("cscore"))
+    val qt = pqTable(queries, book)
+    val coarse = dropSelf(pairQueries(enc, qt, broadcastQueries), excludeSelf, "qid", "vec_id")
+      .select(col("qid"), col("vec_id").as("nid"), adcScore.as("cscore"))
+    gateSampledRecall(
       rerank(saltedTopK(coarse, col("cscore"), PqRerank).select(col("qid"), col("nid")),
-        emb, q)
-    }
-    gateSampledRecall(raw(queries), emb, queries, excludeSelf, "ann_pq")(raw)
+        emb, queries),
+      emb, queries, excludeSelf, "ann_pq")
   }
+
+  private[graft] val PqCodesSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cd", ArrayType(IntegerType))))
+  private[graft] val PqBookSchema = StructType(
+    Seq(StructField("code", IntegerType), StructField("cv", ArrayType(DoubleType))) ++
+      (0 until PqM).map(m => StructField(s"c2_$m", DoubleType)))
 
   /** BUILD-ONCE lifecycle for the FLAT-PQ index — the codebook-train +
     * N-row encode are the whole corpus-proportional cost of pqSearch,
@@ -1098,8 +1112,9 @@ object Similarity {
     * skipping the train+encode, not the scan. */
   def buildPqIndex(emb: DataFrame, path: String): Unit = {
     val book = pqBook(emb, "")
-    pqEncode(emb, book).write.mode("overwrite").parquet(s"$path/codes")
-    book.write.mode("overwrite").parquet(s"$path/book")
+    indexRows(pqEncode(emb, book), PqCodesSchema)
+      .write.mode("overwrite").parquet(s"$path/codes")
+    indexRows(book, PqBookSchema).write.mode("overwrite").parquet(s"$path/book")
   }
 
   /** Search a [[buildPqIndex]]-persisted index: identical results to
@@ -1110,7 +1125,8 @@ object Similarity {
       spark: SparkSession, path: String, emb: DataFrame, queries: DataFrame,
       broadcastQueries: Boolean = true, excludeSelf: Boolean = true): DataFrame = {
     ensureRegistered(spark)
-    pqSearchFrom(spark.read.parquet(s"$path/codes"), spark.read.parquet(s"$path/book"),
+    pqSearchFrom(spark.read.schema(PqCodesSchema).parquet(s"$path/codes"),
+      spark.read.schema(PqBookSchema).parquet(s"$path/book"),
       emb, queries, broadcastQueries, excludeSelf)
   }
 
@@ -1191,9 +1207,9 @@ object Similarity {
     // evaluated once per branch
     val asnR = residualAssign(emb, cent).stage()
     val rbook = pqBook(asnR.select(col("vec_id"), col("v")), "r")
-    // the encoded cell table is staged for the same reason as asnR:
-    // the search and its recall gate share it across a broadcast join
-    pqSearchCells(pqCellTable(asnR, rbook).stage(), cent, rbook, emb,
+    // the encoded cell table is not staged: its one consumer is the
+    // search, whose coarse exchange the recall gate's branch reuses
+    pqSearchCells(pqCellTable(asnR, rbook), cent, rbook, emb,
       queries, nProbes, excludeSelf)
   }
 
@@ -1221,14 +1237,6 @@ object Similarity {
     * the persisted index ([[searchIvfPqIndex]]). */
   private def pqSearchCells(
       cellTable: DataFrame, cent: DataFrame, rbook: DataFrame, emb: DataFrame,
-      queries: DataFrame, nProbes: Int, excludeSelf: Boolean): DataFrame =
-    gateSampledRecall(
-      pqSearchCellsRaw(cellTable, cent, rbook, emb, queries, nProbes, excludeSelf),
-      emb, queries, excludeSelf, "ann_ivf_pq")(
-      s => pqSearchCellsRaw(cellTable, cent, rbook, emb, s, nProbes, excludeSelf))
-
-  private def pqSearchCellsRaw(
-      cellTable: DataFrame, cent: DataFrame, rbook: DataFrame, emb: DataFrame,
       queries: DataFrame, nProbes: Int, excludeSelf: Boolean): DataFrame = {
     val cells = cellTable.withColumn("__cs",
       pmod(col("nid"), lit(CellSalt)).cast("int"))
@@ -1243,9 +1251,14 @@ object Similarity {
       .withColumn("__cs", explode(sequence(lit(0), lit(CellSalt - 1))))
     val coarse = dropSelf(cells.join(probes, Seq("cid", "__cs")), excludeSelf, "qid", "nid")
       .select(col("qid"), col("nid"), (col("dqc") + adcScore).as("cscore"))
-    rerank(saltedTopK(coarse, col("cscore"), PqRerank).select(col("qid"), col("nid")),
-      emb, queries)
+    gateSampledRecall(
+      rerank(saltedTopK(coarse, col("cscore"), PqRerank).select(col("qid"), col("nid")),
+        emb, queries),
+      emb, queries, excludeSelf, "ann_ivf_pq")
   }
+
+  private[graft] val PqCellsSchema = StructType(Seq(StructField("nid", LongType),
+    StructField("cd", ArrayType(IntegerType)), StructField("cid", LongType)))
 
   /** BUILD-ONCE lifecycle for the residual-PQ inverted file — the PQ
     * twin of [[buildIvfIndex]]: assignment, residuals, and encoding
@@ -1262,11 +1275,10 @@ object Similarity {
     // index (append-vs-rebuild equality only makes sense under the
     // same book — codes are meaningless across books)
     val rbook = book.getOrElse(pqBook(asnR.select(col("vec_id"), col("v")), "r"))
-    pqCellTable(asnR, rbook)
-      .select(col("nid"), col("cd"), col("cid"))
+    indexRows(pqCellTable(asnR, rbook), PqCellsSchema)
       .write.mode("overwrite").partitionBy("cid").parquet(s"$path/cells")
-    cent.write.mode("overwrite").parquet(s"$path/centroids")
-    rbook.write.mode("overwrite").parquet(s"$path/book")
+    indexRows(cent, CentroidsSchema).write.mode("overwrite").parquet(s"$path/centroids")
+    indexRows(rbook, PqBookSchema).write.mode("overwrite").parquet(s"$path/book")
   }
 
   /** INCREMENTAL maintenance of the PQ index: delta vectors are
@@ -1276,10 +1288,9 @@ object Similarity {
     * over the combined corpus (spec-asserted). */
   def appendToIvfPqIndex(spark: SparkSession, embDelta: DataFrame, path: String): Unit = {
     ensureRegistered(spark)
-    val cent = spark.read.parquet(s"$path/centroids")
-    val rbook = spark.read.parquet(s"$path/book")
-    pqCellTable(residualAssign(embDelta, cent), rbook)
-      .select(col("nid"), col("cd"), col("cid"))
+    val cent = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
+    val rbook = spark.read.schema(PqBookSchema).parquet(s"$path/book")
+    indexRows(pqCellTable(residualAssign(embDelta, cent), rbook), PqCellsSchema)
       .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
   }
 
@@ -1316,8 +1327,9 @@ object Similarity {
       spark: SparkSession, path: String, emb: DataFrame, queries: DataFrame,
       nProbes: Int = SqNumProbes, excludeSelf: Boolean = true): DataFrame = {
     ensureRegistered(spark)
-    pqSearchCells(spark.read.parquet(s"$path/cells"),
-      spark.read.parquet(s"$path/centroids"), spark.read.parquet(s"$path/book"),
+    pqSearchCells(spark.read.schema(PqCellsSchema).parquet(s"$path/cells"),
+      spark.read.schema(CentroidsSchema).parquet(s"$path/centroids"),
+      spark.read.schema(PqBookSchema).parquet(s"$path/book"),
       emb, queries, nProbes, excludeSelf)
   }
 
@@ -1500,12 +1512,13 @@ object Similarity {
     * so a codebook/centroid regression would ship silently between CI
     * runs). Every execution of those searches now embeds a miniature
     * ann_audit: a CONSTANT-SIZE md5-chosen subsample of its own query
-    * batch is answered both exactly (brute force) and by the identical
-    * approximate pipeline, and the plan aborts when the sampled
-    * quality collapses. Constant sample size is what keeps the gate
-    * 100 TB-legal — its brute side is GateSampleQ·N dots, linear in
-    * the corpus, while a proportional sample would re-introduce the
-    * N²/c exhaustive scan the index exists to avoid.
+    * batch is answered exactly (brute force) and compared with the
+    * rows the search itself returned for those queries, and the plan
+    * aborts when the sampled quality collapses. Constant sample size
+    * is what keeps the gate 100 TB-legal — its brute side is
+    * GateSampleQ·N dots, linear in the corpus, while a proportional
+    * sample would re-introduce the N²/c exhaustive scan the index
+    * exists to avoid.
     *
     * The gated metric is SCORE RECALL — Σ exact-cosine of the returned
     * top-k over Σ exact-cosine of the brute top-k — not id-recall@k.
@@ -1541,15 +1554,19 @@ object Similarity {
     * assignAgreementFrame rule) so GatesSpec can drive the IDENTICAL
     * gated plan with a degraded approx side and prove the job dies.
     * Both inputs carry the search contract's exact `score` column
-    * (every path's rerank emits the full-precision quant6 cosine). */
+    * (every path's rerank emits the full-precision quant6 cosine).
+    * ONE aggregate over the side-tagged union yields the baseline
+    * count and both micro-unit masses (conditional count/sum; an
+    * empty side's mass reads 0). */
   private[graft] def sampledRecallFrame(brute: DataFrame, approx: DataFrame,
       query: String, gateFloor: Double = AnnGateFloor): DataFrame = {
-    def mass(df: DataFrame, as: String) =
-      df.agg(coalesce(sum(floor(col("score") * lit(1000000.0) + lit(0.5))
-        .cast("long")), lit(0L)).as(as))
-    val res = mass(brute, "q_brute")
-      .crossJoin(broadcast(mass(approx, "q_approx")))
-      .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_baseline"))))
+    def side(df: DataFrame, isBrute: Boolean) = df.select(lit(isBrute).as("__brute"),
+      floor(col("score") * lit(1000000.0) + lit(0.5)).cast("long").as("__q"))
+    def mass(isBrute: Boolean) =
+      coalesce(sum(when(col("__brute") === isBrute, col("__q"))), lit(0L))
+    val res = side(brute, isBrute = true).union(side(approx, isBrute = false))
+      .agg(count(when(col("__brute"), 1)).as("n_baseline"),
+        mass(isBrute = true).as("q_brute"), mass(isBrute = false).as("q_approx"))
       .select(col("n_baseline"), col("q_brute"),
         // nullif guards the ANSI divide-by-zero on an empty query
         // batch; the gate condition short-circuits on n_baseline = 0
@@ -1569,26 +1586,37 @@ object Similarity {
           gateFloor, col("score_recall"))))
   }
 
+  /** The gate's constant-size md5-order sample of a query batch. */
+  private[graft] def gateSample(queries: DataFrame): DataFrame =
+    queries
+      .orderBy(md5(concat(lit("anngate"), col("vec_id").cast("string"))), col("vec_id"))
+      .limit(GateSampleQ)
+
   /** Attach the sampled-recall gate to a search result: the gate frame
     * rides the returned plan as a broadcast one-row cross join (the
     * audit-gate mechanics — assert_true inside the frame's filter, so
     * a collapsed recall aborts every execution path while a healthy
-    * one passes rows through byte-identical). `approxOf` must be the
-    * UNGATED form of the same search (the gated form would recurse).
-    * The sample re-runs that search on GateSampleQ queries only; its
-    * corpus-sized subtrees (PQ encode, cell tables) are structurally
-    * identical to the main result's, so exchange reuse pays them once
-    * — bench-verified, not assumed. */
+    * one passes rows through byte-identical). The approximate side is
+    * the result itself restricted to the sampled query ids (a
+    * broadcast semi-join), not a second run of the search: every gated
+    * path is per-query independent — ADC tables, cell probes, the
+    * salted top-R and the rerank are all partitioned by query id — so
+    * those rows ARE what the search returns for the sample alone
+    * (GatesSpec-asserted), and AQE stage reuse serves the gate branch
+    * from the result's exchanges instead of repeating its corpus scan.
+    * (Not when the corpus relation is `.cache()`d: each in-memory scan
+    * becomes its own table-cache stage, the branch no longer matches,
+    * and it recomputes — same rows, more work.) Only the exact side
+    * (GateSampleQ·N dots) is extra work. */
   private def gateSampledRecall(result: DataFrame, emb: DataFrame,
       queries: DataFrame, excludeSelf: Boolean, query: String,
-      gateFloor: Double = AnnGateFloor)
-      (approxOf: DataFrame => DataFrame): DataFrame = {
-    val sample = queries
-      .orderBy(md5(concat(lit("anngate"), col("vec_id").cast("string"))), col("vec_id"))
-      .limit(GateSampleQ)
+      gateFloor: Double = AnnGateFloor): DataFrame = {
+    val sample = gateSample(queries)
     val frame = sampledRecallFrame(
       bruteForce(emb, sample, broadcastQueries = true, excludeSelf),
-      approxOf(sample), query, gateFloor)
+      result.join(broadcast(sample.select(col("vec_id").as("query_id"))),
+        Seq("query_id"), "left_semi"),
+      query, gateFloor)
     result.crossJoin(broadcast(frame.select(lit(1).as("__gate")))).drop("__gate")
   }
 
@@ -1838,7 +1866,7 @@ object Similarity {
       Staging.linkOrCopyTree(fs, base, work, conf)
       // centroids are FROZEN across appends — read + cache them once
       // instead of a schema-infer + scan job per delta (r16)
-      val centW = spark.read.parquet(s"$work/centroids").cache()
+      val centW = spark.read.schema(CentroidsSchema).parquet(s"$work/centroids").cache()
       try {
         Seq(7L, 17L, 27L).foreach { m =>
           appendToIvfIndex(spark, emb.filter(pmod(col("vec_id"), lit(30)) === m),

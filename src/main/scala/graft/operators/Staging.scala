@@ -11,10 +11,11 @@ import org.apache.spark.sql.SparkSession
   * scaffolding: built once per (corpus, JVM), served read-only, and
   * swept at JVM exit. The root key encodes
   *  - md5(corpus dir) — two sf dirs never share a root;
-  *  - a content FINGERPRINT of the backing table (file count + total
-  *    bytes — r12 advice: a fixture dir REWRITTEN within one
-  *    application must rebuild, never silently reuse a stale index,
-  *    without paying a data scan for the check);
+  *  - a content FINGERPRINT of the backing table (file count, total
+  *    bytes and newest file mtime — r12 advice: a fixture dir
+  *    REWRITTEN within one application must rebuild, never silently
+  *    reuse a stale index, without paying a data scan for the check;
+  *    the mtime catches a rewrite that keeps the byte size);
   *  - the Spark application id — two JVMs on the same dir (Verify and
   *    Bench overlapping) never race on a shared index (r11 advice).
   * Queries run sequentially in Verify, Bench, and the test suite, so
@@ -41,11 +42,14 @@ private[graft] object Staging {
   }
 
   /** Cheap content fingerprint of the corpus behind a staged root:
-    * file count + total bytes of `dir/table`. */
+    * file count, total bytes and newest modification time of the
+    * files under `dir/table` (one recursive listing, no data read). */
   private def corpusFingerprint(spark: SparkSession, dir: String, table: String): String = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val sum = p.getFileSystem(spark.sessionState.newHadoopConf()).getContentSummary(p)
-    Portable.md5Hex(s"${sum.getFileCount}_${sum.getLength}").take(8)
+    val listing = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+    val files = Iterator.continually(listing).takeWhile(_.hasNext).map(_.next()).toSeq
+    val newest = files.map(_.getModificationTime).foldLeft(0L)(math.max)
+    Portable.md5Hex(s"${files.size}_${files.map(_.getLen).sum}_$newest").take(8)
   }
 
   /** Minimum usable space for auto-selecting a tmpfs scratch base.

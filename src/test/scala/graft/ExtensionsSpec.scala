@@ -29,6 +29,26 @@ class ExtensionsSpec extends SparkSuite {
     new GraftExtensions().apply(new SparkSessionExtensions) // must not throw
   }
 
+  test("register installs every missing function in a fresh session and keeps existing ones") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    val names = Seq("vec_dot", "vec_cosine", "vec_dot_i8", "md5_words", "shingle_words",
+      "shingle_keys", "minhash_sigs", "bloom_filter_agg", "might_contain")
+    val fresh = spark.newSession()
+    val registry = fresh.sessionState.functionRegistry
+    def lookup(n: String) = registry.lookupFunctionBuilder(FunctionIdentifier(n))
+    assert(names.forall(n => lookup(n).isEmpty), "a new session starts without graft functions")
+    // a session that already holds some of them (as GraftExtensions
+    // leaves it) keeps those and still gets the rest
+    val preset: Seq[Expression] => Expression = exprs => graft.functions.VecDot(exprs(0), exprs(1))
+    registry.createOrReplaceTempFunction("vec_dot", preset, "built-in")
+    VecExpressions.register(fresh)
+    names.foreach(n => assert(lookup(n).isDefined, s"$n not registered"))
+    assert(lookup("vec_dot").get eq preset, "register replaced an existing vec_dot")
+    assert(fresh.sql("SELECT vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d))").head.getDouble(0)
+      === 11.0)
+  }
+
   test("the bloom build/probe pair works from plain SQL") {
     VecExpressions.register(spark)
     import spark.implicits._

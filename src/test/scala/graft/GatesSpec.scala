@@ -159,4 +159,57 @@ class GatesSpec extends SparkSuite {
     val none = graft.operators.Dedup.dedupAuditFrame(sample, truth.limit(0), dead).head
     assert(none.getAs[Long]("n_truth_pairs") === 0L)
   }
+
+  test("gated ANN searches are per-query independent: the batch result on the gate sample equals the sample's search") {
+    // the recall gate takes its approximate side from the search
+    // result restricted to the sampled query ids; that is exact only
+    // because each of these paths answers a query independently of
+    // the rest of its batch
+    import graft.operators.Similarity
+    import org.apache.spark.sql.DataFrame
+    graft.functions.VectorOps.ensureRegistered(spark)
+    val emb = graft.sources.Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v")).cache()
+    val queries = Similarity.defaultQueries(emb)
+    val sample = Similarity.gateSample(queries)
+    val cent = Similarity.seedCentroids(emb)
+    val dir = java.nio.file.Files.createTempDirectory("graft_gate_pq").toString
+    Similarity.buildPqIndex(emb, dir)
+    val searches: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "pqSearch" -> (q => Similarity.pqSearch(emb, q)),
+      "searchPqIndex" -> (q => Similarity.searchPqIndex(spark, dir, emb, q)),
+      "ivfSq8Search" -> (q => Similarity.ivfSq8Search(emb, cent, q)),
+      "ivfPqSearch" -> (q => Similarity.ivfPqSearch(emb, cent, q)))
+    def rows(df: DataFrame) = df.orderBy("query_id", "rank").collect().toSeq
+    val ids = sample.select(col("vec_id").as("query_id"))
+    searches.foreach { case (name, search) =>
+      val restricted = rows(search(queries).join(ids, Seq("query_id"), "left_semi"))
+      assert(restricted.map(_.getAs[Long]("query_id")).distinct.size ===
+        Similarity.GateSampleQ, s"$name: the sample's queries must all be answered")
+      assert(restricted === rows(search(sample)),
+        s"$name: the batch search restricted to the sample differs from the sample's search")
+    }
+    emb.unpersist()
+  }
+
+  test("a warm ann_pq call runs no parquet schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val annPq = SparkEntry.queries("ann_pq")
+    annPq(spark, sf0001).collect() // cold: builds (or finds) the staged index
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        j.stageInfos.foreach(s => sites.add(s.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      annPq(spark, sf0001).collect()
+      org.apache.spark.ListenerBusProbe.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!sites.isEmpty, "the probe saw no job at all")
+    val schemaJobs = sites.toArray.map(_.toString)
+      .filter(_.startsWith("parquet at Similarity.scala"))
+    assert(schemaJobs.isEmpty,
+      s"the staged index must be read with its written schema: ${schemaJobs.mkString(", ")}")
+  }
 }

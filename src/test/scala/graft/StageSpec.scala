@@ -59,4 +59,27 @@ class StageSpec extends SparkSuite {
     // back in default mode, staging works again without touching the dir
     assert(graft.operators.Distributed.stage(df).count() === 10)
   }
+
+  test("a staged root follows a same-size rewrite of its backing table") {
+    // the root key fingerprints the table by file count, bytes AND
+    // newest mtime: a rewrite that keeps the byte size must still get
+    // a fresh root instead of reusing an index over the old rows
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-fp-").toString
+    val table = s"$dir/t.parquet"
+    def write(c: Char): Unit = Seq(c.toString * 16).toDF("s")
+      .coalesce(1).write.mode("overwrite").parquet(table)
+    def bytes(): Long = {
+      val p = new org.apache.hadoop.fs.Path(table)
+      p.getFileSystem(spark.sessionState.newHadoopConf()).getContentSummary(p).getLength
+    }
+    def root() = graft.operators.Staging.stagedRoot(spark, dir, "fp", "t.parquet")
+    write('a')
+    val (before, size) = (root(), bytes())
+    assert(root() === before, "an untouched table must keep its root")
+    Thread.sleep(20) // the rewrite lands on a later millisecond
+    write('b')
+    assert(bytes() === size, "fixture precondition: the rewrite keeps the byte size")
+    assert(root() !== before, "a same-size rewrite must not reuse the stale root")
+  }
 }
