@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -91,7 +89,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // cal probes accumulate: one BEFORE any query (the original
     // contention pre-probe), plus — when the first pass flags the box —
     // one more right before the flagged queries are re-timed (r16
@@ -104,14 +101,7 @@ object Bench {
     // window was quiet.
     var cals = List(calibrate())
     def calMs = cals.min
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     // Warm the JVM/codegen once so per-query times measure the plan, not JIT.
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()

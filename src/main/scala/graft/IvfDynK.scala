@@ -38,7 +38,7 @@ object IvfDynK {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
-    val spark = Stress.session()
+    val spark = Session.local()
     graft.functions.VectorOps.ensureRegistered(spark)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")

@@ -16,7 +16,7 @@ object Materialize {
     val outDir =
       if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_corpus").toString + "/corpus"
-    val spark = Stress.session()
+    val spark = Session.local()
     val (nIn, nKept) = operators.Corpus.materialize(spark, sfDir, outDir)
     val nFiles = new java.io.File(outDir).listFiles()
       .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))

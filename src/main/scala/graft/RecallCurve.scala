@@ -27,7 +27,7 @@ object RecallCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val copies = sys.env.getOrElse("SPARK_GRAFT_STRESS_COPIES", "10").toInt
-    val spark = Stress.session()
+    val spark = Session.local()
     graft.functions.VectorOps.ensureRegistered(spark)
     val dir = Stress.buildStressCorpus(spark, sfDir, copies)
 

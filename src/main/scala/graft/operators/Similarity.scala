@@ -40,25 +40,27 @@ import graft.operators.Distributed.StageSyntax
   * `excludeSelf = false`, since there id equality is coincidence and
   * would drop an unrelated neighbor.
   *
-  * Scale shapes (100 TB contract):
-  *  - `ann_bruteforce`: scan × query set, salted exact top-k — the
-  *    exact baseline every approximate path is measured against.
+  * Scale shapes (100 TB contract): every ANN search is one spine — a
+  * candidate generator (the flat query pairing, or the salted cell
+  * join whose [[CellSalt]] keeps a small K from serializing the corpus
+  * into K reducers) scoring one column per path, then either the exact
+  * cosine join + salted top-k or the shortlist tail (salted coarse
+  * top-R, exact rerank, sampled-recall gate). Per path:
+  *  - `ann_bruteforce`: flat pairing, exact cosine — the exact
+  *    baseline every approximate path is measured against.
   *  - `ann_lsh` / `dedup_embed`: random-hyperplane sign buckets (4
   *    tables × 4 planes) generate candidates via a shuffle on the
-  *    bucket key; cosine runs only within buckets. No CartesianProduct
-  *    in any plan. Recall@5 ≈ 0.52 measured on the worst-case random
-  *    synthetic vectors (ScaleSpec).
-  *  - `ann_ivf`: fixed-K coarse centroids, nProbe cells searched; the
-  *    cell join is salted ([[CellSalt]]) so K small never serializes
-  *    the corpus into K reducers.
-  *  - `ann_quantized`: flat SQ8 — int8 coarse scan + exact rerank.
-  *  - `ann_ivf_sq8`: the IVFADC composition — the int8 coarse pass runs
-  *    ONLY inside the query's probed IVF cells, the shape real
-  *    billion-vector systems use (Jegou et al.).
-  *  - `ann_pq`: true product quantization — 16 half-byte codes per vector,
-  *    per-query ADC lookup tables, no vector math at scan time.
-  *  - `ann_ivf_pq`: the complete residual IVFADC (PQ codes of
-  *    v − centroid inside probed cells).
+  *    bucket key, exact cosine join. No CartesianProduct in any plan.
+  *    Recall@5 ≈ 0.52 on the worst-case random vectors (ScaleSpec).
+  *  - `ann_ivf`: cell join over fixed-K coarse centroids (nProbe cells
+  *    per query), exact cosine join.
+  *  - `ann_quantized`: flat pairing, int8 dot, shortlist (ungated).
+  *  - `ann_ivf_sq8`: cell join, int8 dot, shortlist — the IVFADC
+  *    composition real billion-vector systems use (Jegou et al.).
+  *  - `ann_pq`: flat pairing, ADC lookups over 16 half-byte PQ codes
+  *    (no vector math at scan time), shortlist.
+  *  - `ann_ivf_pq`: cell join, dot(q, centroid) + residual-PQ ADC,
+  *    shortlist — the complete residual IVFADC.
   *
   * Hyperplanes are md5-derived constants (VectorOps.hyperplane) so the
   * DuckDB oracle rebuilds them bit-identically (SURVEY.md §4).
@@ -400,6 +402,18 @@ object Similarity {
   private val cosSql =
     "list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]), CAST(eb.embedding AS DOUBLE[]))"
 
+  /** Oracle twin of [[lshSearch]]'s scored candidates `sc`, shared by
+    * ann_lsh and the ann_audit recall scorer. */
+  private def lshScoredCtes: String =
+    s"""cand AS (SELECT DISTINCT qb.vec_id AS qid, vb.vec_id AS nid
+       |         FROM bkt qb JOIN bkt vb
+       |           ON qb.t = vb.t AND qb.bucket = vb.bucket AND qb.vec_id <> vb.vec_id
+       |         WHERE qb.vec_id IN (SELECT vec_id FROM qs)),
+       |sc AS (SELECT c.qid, c.nid, ${Portable.Quant6Sql(cosSql)} AS score
+       |       FROM cand c
+       |       JOIN embeddings ea ON ea.vec_id = c.qid
+       |       JOIN embeddings eb ON eb.vec_id = c.nid)""".stripMargin
+
   /** (vec_id, v, t, bucket) rows — NumTables rows per vector from ONE
     * corpus scan (all 4 tables' buckets are projected per row, then
     * posexploded — the unioned-scans form read the parquet 4 times to
@@ -650,11 +664,14 @@ object Similarity {
     * (each vector's K centroid scores are born in one partition from
     * the broadcast join), so the shuffle carries N rows — at 1B
     * vectors × 1k centroids a window here would shuffle 1T rows to
-    * rank them. Tie-break matches the oracle: best score, LOWEST cid. */
-  private[graft] def assign(emb: DataFrame, cent: DataFrame): DataFrame =
-    scoredByCent(emb, cent)
+    * rank them. Tie-break matches the oracle: best score, LOWEST cid.
+    * `carry` columns ride the aggregate (`first`: every scored row of a
+    * vector carries the same value), so a consumer never re-joins the
+    * corpus for them. */
+  private[graft] def assign(emb: DataFrame, cent: DataFrame, carry: String*): DataFrame =
+    scoredByCent(emb, cent, carry.map(col): _*)
       .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), bestCent).as("cid"))
+      .agg(max_by(col("cid"), bestCent).as("cid"), carry.map(c => first(col(c)).as(c)): _*)
 
   /** Each query's nProbe nearest cells: same aggregate trick — top-n
     * kept via a bounded sorted list per key (partials merge map-side,
@@ -667,20 +684,35 @@ object Similarity {
       .select(col("vec_id").as("qid"), explode(col("top")).as("p"))
       .select(col("qid"), (-col("p.nc")).as("cid"))
 
-  /** Corpus × query pairing for the flat (all-pairs) search paths.
+  /** Candidate generator for the flat (all-pairs) search paths: corpus
+    * (vec_id, …) × queries (qid, …) as (qid, nid, `score`).
     * Broadcast for a bounded workload batch; fragment-and-replicate
     * (keyed equi-join on `pmod(vec_id, F)`, queries replicated F ways)
     * when the batch outgrows a comfortable broadcast — every pair
     * still appears exactly once because a corpus row matches only the
     * replica carrying its own fragment id. */
-  private def pairQueries(
-      corpus: DataFrame, queries: DataFrame, broadcastQueries: Boolean): DataFrame =
-    if (broadcastQueries) corpus.crossJoin(broadcast(queries))
+  private def pairQueries(corpus: DataFrame, queries: DataFrame, broadcastQueries: Boolean,
+      excludeSelf: Boolean, score: Column): DataFrame = {
+    val pairs = if (broadcastQueries) corpus.crossJoin(broadcast(queries))
     else corpus
       .withColumn("__qs", pmod(col("vec_id"), lit(QueryFragments)).cast("int"))
       .join(queries.withColumn("__qs",
         explode(sequence(lit(0), lit(QueryFragments - 1)))), "__qs")
       .drop("__qs")
+    dropSelf(pairs, excludeSelf, "vec_id").select(col("qid"), col("vec_id").as("nid"), score)
+  }
+
+  /** Candidate generator for the IVF paths: cell rows (nid, cid, …) ×
+    * query probes (qid, cid, …) as (qid, nid, `score`…), probes
+    * replicated [[CellSalt]] ways so each cell row meets exactly one
+    * replica. No broadcast hint: AQE broadcasts the Q-shaped probe
+    * table while it fits and keys the join when it doesn't. */
+  private def cellJoin(cells: DataFrame, probes: DataFrame, excludeSelf: Boolean,
+      score: Column*): DataFrame =
+    dropSelf(cells.withColumn("__cs", pmod(col("nid"), lit(CellSalt)).cast("int"))
+      .join(probes.withColumn("__cs", explode(sequence(lit(0), lit(CellSalt - 1)))),
+        Seq("cid", "__cs")), excludeSelf, "nid")
+      .select(Seq(col("qid"), col("nid")) ++ score: _*)
 
   /** Exact top-k per query via the salted two-phase window: per-(qid,
     * nid%64) pre-top first, then the true top-k over the 64·k
@@ -712,17 +744,64 @@ object Similarity {
     * row. For an EXTERNAL query batch whose ids are not corpus ids,
     * pass excludeSelf = false — there, id equality is coincidence and
     * the default would silently drop an unrelated true neighbor. */
-  private def dropSelf(pairs: DataFrame, on: Boolean, qid: String, nid: String): DataFrame =
-    if (on) pairs.filter(col(nid) =!= col(qid)) else pairs
+  private def dropSelf(pairs: DataFrame, on: Boolean, nid: String): DataFrame =
+    if (on) pairs.filter(col(nid) =!= col("qid")) else pairs
+
+  /** The exact (qid, nid) cosine join: keyed joins to both float
+    * vectors, quant6 cosine as `score`. */
+  private def exactScores(cand: DataFrame, emb: DataFrame, queries: DataFrame): DataFrame =
+    cand
+      .join(queries.select(col("vec_id").as("qid"), col("v").as("qv")), "qid")
+      .join(emb.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
+      .select(col("qid"), col("nid"),
+        Portable.quant6(cosine(col("qv"), col("nv"))).as("score"))
+
+  /** The shortlist tail of every quantized path: salted coarse top-
+    * `width` by `cscore`, exact rerank of the survivors, and the final
+    * top-k — a per-query window over ≤ width rows (bounded, no salt
+    * needed).
+    *
+    * `gate = Some(query)` attaches that query's sampled-recall gate
+    * ([[sampledRecallFrame]]): the gate frame rides the returned plan
+    * as a broadcast one-row cross join (the audit-gate mechanics —
+    * assert_true inside the frame's filter, so a collapsed recall
+    * aborts every execution path while a healthy one passes rows
+    * through byte-identical). The approximate side is the result
+    * itself restricted to the sampled query ids (a broadcast
+    * semi-join), not a second run of the search: every gated path is
+    * per-query independent — ADC tables, cell probes, the salted top-R
+    * and the rerank are all partitioned by query id — so those rows
+    * ARE what the search returns for the sample alone (GatesSpec-
+    * asserted), and AQE stage reuse serves the gate branch from the
+    * result's exchanges instead of repeating its corpus scan. (Not
+    * when the corpus relation is `.cache()`d: each in-memory scan
+    * becomes its own table-cache stage, the branch no longer matches,
+    * and it recomputes — same rows, more work.) Only the exact side
+    * (GateSampleQ·N dots) is extra work, and a search's corpus-sized
+    * inputs (the N-row encode, the cell table) need no staging: they
+    * run once per execution. */
+  private def shortlist(coarse: DataFrame, width: Int, emb: DataFrame, queries: DataFrame,
+      excludeSelf: Boolean, gate: Option[String], gateFloor: Double = AnnGateFloor): DataFrame = {
+    val top = saltedTopK(coarse, col("cscore"), width).select(col("qid"), col("nid"))
+    val wTop = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
+    val result = finish(exactScores(top, emb, queries)
+      .withColumn("rn", row_number().over(wTop)).filter(col("rn") <= TopK))
+    gate.fold(result) { query =>
+      val sample = gateSample(queries)
+      val frame = sampledRecallFrame(
+        bruteForce(emb, sample, broadcastQueries = true, excludeSelf),
+        result.join(broadcast(sample.select(col("vec_id").as("query_id"))),
+          Seq("query_id"), "left_semi"),
+        query, gateFloor)
+      result.crossJoin(broadcast(frame.select(lit(1).as("__gate")))).drop("__gate")
+    }
+  }
 
   /** int8 storage: floor-scale to [-128, 127], kept as tinyint — the
     * 8×-narrower column the SQ8 coarse passes scan. */
   private def quantizeExpr(v: Column): Column =
     transform(v, x =>
       greatest(least(floor(x * 127.0), lit(127.0)), lit(-128.0)).cast("tinyint"))
-
-  private def quantize(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), quantizeExpr(col("v")).as("qv"))
 
   /** L7 — the LSH-bucketed search (shared by the ann_lsh query and
     * the ann_audit recall scorer, so the audit measures the exact
@@ -742,15 +821,10 @@ object Similarity {
       .select(col("a.vec_id").as("qid"), col("b.vec_id").as("nid"))
       .distinct()
     val emb = embV(spark, dir)
-    val scored = cand
-      .join(emb.select(col("vec_id").as("qid"), col("v").as("qe")), "qid")
-      .join(emb.select(col("vec_id").as("nid"), col("v").as("ne")), "nid")
-      .select(col("qid"), col("nid"),
-        Portable.quant6(cosine(col("ne"), col("qe"))).as("score"))
     // sign buckets are a constant partition of the space (16 per
     // table), so bucket size — and with it a query's candidate set —
     // grows with N: salt the final top-k like every other ANN path
-    finish(saltedTopK(scored, col("score"), TopK))
+    finish(saltedTopK(exactScores(cand, emb, emb), col("score"), TopK))
   }
 
   /** L6 — exact brute-force cosine top-k for a query batch. */
@@ -758,9 +832,8 @@ object Similarity {
       emb: DataFrame, queries: DataFrame, broadcastQueries: Boolean = true,
       excludeSelf: Boolean = true): DataFrame = {
     val q = queries.select(col("vec_id").as("qid"), col("v").as("qe"))
-    val scored = dropSelf(pairQueries(emb, q, broadcastQueries), excludeSelf, "qid", "vec_id")
-      .select(col("qid"), col("vec_id").as("nid"),
-        Portable.quant6(cosine(col("v"), col("qe"))).as("score"))
+    val scored = pairQueries(emb, q, broadcastQueries, excludeSelf,
+      Portable.quant6(cosine(col("v"), col("qe"))).as("score"))
     finish(saltedTopK(scored, col("score"), TopK))
   }
 
@@ -772,28 +845,11 @@ object Similarity {
   def quantizedSearch(
       emb: DataFrame, queries: DataFrame, broadcastQueries: Boolean = true,
       excludeSelf: Boolean = true): DataFrame = {
-    val qz = quantize(emb)
-    val q8 = quantize(queries).select(col("vec_id").as("qid"), col("qv").as("qq"))
-    val idot = call_function("vec_dot_i8", col("qv"), col("qq"))
-    val coarse = dropSelf(pairQueries(qz, q8, broadcastQueries), excludeSelf, "qid", "vec_id")
-      .select(col("qid"), col("vec_id").as("nid"), idot.as("cscore"))
-    rerank(saltedTopK(coarse, col("cscore"), RerankK).select(col("qid"), col("nid")),
-      emb, queries)
-  }
-
-  /** Exact full-precision rerank of a bounded (≤ RerankK per query)
-    * candidate set, then the final top-k — shared by both SQ8 paths.
-    * Candidates are keyed joins against the float column; the final
-    * window is per-query over ≤ RerankK rows (bounded, no salt
-    * needed). */
-  private def rerank(cand: DataFrame, emb: DataFrame, queries: DataFrame): DataFrame = {
-    val scored = cand
-      .join(queries.select(col("vec_id").as("qid"), col("v").as("qv2")), "qid")
-      .join(emb.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
-      .select(col("qid"), col("nid"),
-        Portable.quant6(cosine(col("qv2"), col("nv"))).as("score"))
-    val wTop = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("nid"))
-    finish(scored.withColumn("rn", row_number().over(wTop)).filter(col("rn") <= TopK))
+    val qz = emb.select(col("vec_id"), quantizeExpr(col("v")).as("qv"))
+    val q8 = queries.select(col("vec_id").as("qid"), quantizeExpr(col("v")).as("qq"))
+    val coarse = pairQueries(qz, q8, broadcastQueries, excludeSelf,
+      call_function("vec_dot_i8", col("qv"), col("qq")).as("cscore"))
+    shortlist(coarse, RerankK, emb, queries, excludeSelf, gate = None)
   }
 
   /** The IVF search stage against ANY (cid, cv) centroid table —
@@ -805,20 +861,9 @@ object Similarity {
   def ivfSearch(
       emb: DataFrame, cent: DataFrame, queries: DataFrame,
       nProbes: Int = NumProbes, excludeSelf: Boolean = true): DataFrame = {
-    val asnS = assign(emb, cent)
-      .select(col("vec_id").as("nid"), col("cid"),
-        pmod(col("vec_id"), lit(CellSalt)).cast("int").as("__cs"))
-    val cand = dropSelf(
-      probeCells(queries, cent, nProbes)
-        .withColumn("__cs", explode(sequence(lit(0), lit(CellSalt - 1))))
-        .join(asnS, Seq("cid", "__cs")), excludeSelf, "qid", "nid")
-      .select(col("qid"), col("nid")).distinct()
-    val scored = cand
-      .join(queries.select(col("vec_id").as("qid"), col("v").as("qv")), "qid")
-      .join(emb.select(col("vec_id").as("nid"), col("v").as("nv")), "nid")
-      .select(col("qid"), col("nid"),
-        Portable.quant6(cosine(col("qv"), col("nv"))).as("score"))
-    finish(saltedTopK(scored, col("score"), TopK))
+    val cells = assign(emb, cent).select(col("vec_id").as("nid"), col("cid"))
+    val cand = cellJoin(cells, probeCells(queries, cent, nProbes), excludeSelf).distinct()
+    finish(saltedTopK(exactScores(cand, emb, queries), col("score"), TopK))
   }
 
   /** L7d — IVFADC (IVF × SQ8): the int8 coarse pass runs ONLY inside
@@ -832,34 +877,22 @@ object Similarity {
     * lets it probe 2.5× more cells for recall at similar cost.
     *
     * Stage shapes: assignment O(N·K) map-side aggregate; ONE keyed
-    * join attaches each corpus row's int8 vector to its cell; probes
-    * replicate by [[CellSalt]] and equi-join on (cid, salt) — AQE
-    * broadcasts the workload-sized probe table while it fits, keys the
-    * join when it doesn't (no explicit hint: the probe table is
-    * Q-shaped); coarse top-R is the salted window; rerank is keyed. */
+    * join attaches each corpus row's int8 vector to its cell; then the
+    * spine's salted cell join ([[cellJoin]]) and shortlist tail. */
   def ivfSq8Search(
       emb: DataFrame, cent: DataFrame, queries: DataFrame,
       nProbes: Int = SqNumProbes, excludeSelf: Boolean = true): DataFrame =
-    // not staged: the cell table has one consumer, and the recall
-    // gate's branch reuses the search's coarse exchange, so the N×K
-    // assignment runs once per execution (final plan: one max_by
-    // aggregate)
     sq8SearchCells(quantizedCells(emb, cent), emb, cent, queries,
       nProbes, excludeSelf)
 
   /** Each corpus row's (cell, int8 vector) in ONE scan and ONE
     * shuffle: the quantization is a per-row projection BEFORE the
     * broadcast centroid expansion, and the int8 vector rides the
-    * assignment aggregate (all K scored rows of a vector carry the
-    * same qv, so `first` is deterministic) — vs assigning and
-    * quantizing separately, which costs a second corpus scan plus a
-    * sort-merge join's two shuffles to reunite them. */
+    * assignment aggregate — vs assigning and quantizing separately,
+    * which costs a second corpus scan plus a sort-merge join's two
+    * shuffles to reunite them. */
   private def quantizedCells(emb: DataFrame, cent: DataFrame): DataFrame =
-    scoredByCent(
-      emb.select(col("vec_id"), col("v"), quantizeExpr(col("v")).as("qv")),
-      cent, col("qv"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cid"), bestCent).as("cid"), first(col("qv")).as("nv8"))
+    assign(emb.select(col("vec_id"), col("v"), quantizeExpr(col("v")).as("nv8")), cent, "nv8")
       .select(col("vec_id").as("nid"), col("cid"), col("nv8"))
 
   /** The IVFADC search from a materialized (nid, cid, nv8) cell table
@@ -880,36 +913,11 @@ object Similarity {
       cellTable: DataFrame, emb: DataFrame, cent: DataFrame,
       queries: DataFrame, nProbes: Int, excludeSelf: Boolean,
       rerankK: Int = SqRerankK): DataFrame = {
-    val cells = cellTable.withColumn("__cs",
-      pmod(col("nid"), lit(CellSalt)).cast("int"))
-    val q8 = quantize(queries).select(col("vec_id").as("qid"), col("qv").as("qq8"))
-    val probes = probeCells(queries, cent, nProbes)
-      .join(q8, "qid")
-      .withColumn("__cs", explode(sequence(lit(0), lit(CellSalt - 1))))
-    val coarse = dropSelf(cells.join(probes, Seq("cid", "__cs")), excludeSelf, "qid", "nid")
-      .select(col("qid"), col("nid"),
-        call_function("vec_dot_i8", col("nv8"), col("qq8")).as("cscore"))
-    gateSampledRecall(
-      rerank(saltedTopK(coarse, col("cscore"), rerankK).select(col("qid"), col("nid")),
-        emb, queries),
-      emb, queries, excludeSelf, "ann_ivf_sq8", SqGateFloor)
+    val q8 = queries.select(col("vec_id").as("qid"), quantizeExpr(col("v")).as("qq8"))
+    val coarse = cellJoin(cellTable, probeCells(queries, cent, nProbes).join(q8, "qid"),
+      excludeSelf, call_function("vec_dot_i8", col("nv8"), col("qq8")).as("cscore"))
+    shortlist(coarse, rerankK, emb, queries, excludeSelf, Some("ann_ivf_sq8"), SqGateFloor)
   }
-
-  /** Written schemas of the persisted index tables (these two and the
-    * PQ ones beside [[buildPqIndex]] / [[buildIvfPqIndex]]): ONE
-    * definition per table, shared by its writer ([[indexRows]]) and
-    * every reader (`spark.read.schema`), so a typed read runs no
-    * parquet schema-inference job. `cid` is the cells' partition column —
-    * declared, it reads back as the bigint the writer wrote, not an
-    * inferred int. */
-  private[graft] val CentroidsSchema = StructType(Seq(
-    StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
-  private[graft] val Sq8CellsSchema = StructType(Seq(StructField("nid", LongType),
-    StructField("nv8", ArrayType(ByteType)), StructField("cid", LongType)))
-
-  /** `df` as exactly the columns (order and types) of `schema`. */
-  private def indexRows(df: DataFrame, schema: StructType): DataFrame =
-    df.select(schema.map(f => col(f.name).cast(f.dataType)): _*)
 
   /** BUILD-ONCE lifecycle for the inverted file: persist the
     * assignment + quantized vectors as a parquet table PARTITIONED BY
@@ -946,16 +954,8 @@ object Similarity {
     * refined table is WRITTEN FIRST and read back for the cell
     * assignment: one materialization cuts the K-row lineage out of
     * the N-row build plan, and the cells are assigned against
-    * byte-for-byte the centroids every later search will probe.
-    *
-    * The cell write repartitions on cid: straight off the assignment
-    * aggregate every one of the shuffle's tasks writes a file into
-    * each `cid=` dir it touches — tasks×K tiny files (≈20k at the
-    * tile set's K=625: the 'dynK search wall' in IVF_DYNK_R14 was
-    * mostly per-file listing/open overhead, and at a real 100 TB
-    * index a million-file layout is an operational bug). Hashing on
-    * cid lands each cell in exactly one task → one file per cell,
-    * for one extra N-row exchange at build time. */
+    * byte-for-byte the centroids every later search will probe. The
+    * cells are written one file per cell ([[IndexTable]]). */
   def buildIvfIndex(emb: DataFrame, cent: DataFrame, path: String,
       twoLevel: Option[(Int, Int)] = None, refineIters: Int = 0): Unit = {
     require(refineIters == 0 || twoLevel.isDefined,
@@ -965,17 +965,15 @@ object Similarity {
         refineCentroidsTwoLevel(emb, cent, fineK, coarseK, refineIters)
       case _ => cent
     }
-    indexRows(cFinal, CentroidsSchema).write.mode("overwrite").parquet(s"$path/centroids")
-    val centR = emb.sparkSession.read.schema(CentroidsSchema).parquet(s"$path/centroids")
+    Index.Centroids.write(cFinal, path)
+    val centR = Index.Centroids.read(emb.sparkSession, path)
     val cells = twoLevel match {
       case Some((fineK, coarseK)) =>
         assignTwoLevel(emb, centR, fineK, coarseK)
           .select(col("vec_id").as("nid"), quantizeExpr(col("v")).as("nv8"), col("cid"))
       case None => quantizedCells(emb, centR)
     }
-    indexRows(cells, Sq8CellsSchema)
-      .repartition(col("cid"))
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/cells")
+    Index.Sq8Cells.write(cells, path)
   }
 
   /** INCREMENTAL index maintenance — the ANN twin of
@@ -989,11 +987,8 @@ object Similarity {
     * (vector, centroids), and parquet append into a partition dir is
     * set-union at the reader. Re-seed/refine centroids and rebuild
     * only when drift erodes the measured recall (dev/recall.sh). */
-  def appendToIvfIndex(spark: SparkSession, embDelta: DataFrame, path: String): Unit = {
-    ensureRegistered(spark)
-    appendToIvfIndex(spark, embDelta, path,
-      spark.read.schema(CentroidsSchema).parquet(s"$path/centroids"))
-  }
+  def appendToIvfIndex(spark: SparkSession, embDelta: DataFrame, path: String): Unit =
+    appendToIvfIndex(spark, embDelta, path, Index.Centroids.read(spark, path))
 
   /** Same, against a caller-provided centroid relation — the r16
     * latency fix for multi-delta maintenance (guide §2.4 "remove
@@ -1005,9 +1000,7 @@ object Similarity {
   def appendToIvfIndex(spark: SparkSession, embDelta: DataFrame, path: String,
       cent: DataFrame): Unit = {
     ensureRegistered(spark)
-    indexRows(quantizedCells(embDelta, cent), Sq8CellsSchema)
-      .repartition(col("cid")) // one delta file per touched cell, as at build
-      .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
+    Index.Sq8Cells.write(quantizedCells(embDelta, cent), path, "append")
   }
 
   /** Search a [[buildIvfIndex]]-persisted index: identical results to
@@ -1020,9 +1013,8 @@ object Similarity {
       nProbes: Int = SqNumProbes, excludeSelf: Boolean = true,
       rerankK: Int = SqRerankK): DataFrame = {
     ensureRegistered(spark)
-    sq8SearchCells(spark.read.schema(Sq8CellsSchema).parquet(s"$path/cells"), emb,
-      spark.read.schema(CentroidsSchema).parquet(s"$path/centroids"), queries,
-      nProbes, excludeSelf, rerankK)
+    sq8SearchCells(Index.Sq8Cells.read(spark, path), emb, Index.Centroids.read(spark, path),
+      queries, nProbes, excludeSelf, rerankK)
   }
 
   /** PQ geometry: M subspaces × Cn codes. 64 dims / 16 = 4-dim
@@ -1046,6 +1038,56 @@ object Similarity {
   // R=64 → measured again at R=128 for the r8 floor lift). Rerank
   // cost is Q·R exact cosines — workload-sized, never corpus-sized.
   private val PqRerank = 128
+
+  /** Written schemas of the persisted index tables: ONE definition per
+    * table, shared by its writer and every reader, so a typed read runs
+    * no parquet schema-inference job. `cid` is the cells' partition
+    * column — declared, it reads back as the bigint the writer wrote,
+    * not an inferred int. */
+  private[graft] val CentroidsSchema = StructType(Seq(
+    StructField("cid", LongType), StructField("cv", ArrayType(DoubleType))))
+  private[graft] val Sq8CellsSchema = StructType(Seq(StructField("nid", LongType),
+    StructField("nv8", ArrayType(ByteType)), StructField("cid", LongType)))
+  private[graft] val PqCodesSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("cd", ArrayType(IntegerType))))
+  private[graft] val PqBookSchema = StructType(
+    Seq(StructField("code", IntegerType), StructField("cv", ArrayType(DoubleType))) ++
+      (0 until PqM).map(m => StructField(s"c2_$m", DoubleType)))
+  private[graft] val PqCellsSchema = StructType(Seq(StructField("nid", LongType),
+    StructField("cd", ArrayType(IntegerType)), StructField("cid", LongType)))
+
+  /** One persisted index table under an index root: its directory
+    * name, its written schema, and whether it is the inverted file
+    * (`byCell`: partitioned by `cid`). Every build, append, search and
+    * the lifecycle seat go through this one write and one typed read.
+    * A cell write repartitions on cid first: straight off an
+    * assignment aggregate or join every one of the shuffle's tasks
+    * writes a file into each `cid=` dir it touches — tasks×K tiny
+    * files (≈20k at the tile set's K=625: the 'dynK search wall' in
+    * IVF_DYNK_R14 was mostly per-file listing/open overhead, and at a
+    * real 100 TB index a million-file layout is an operational bug).
+    * Hashing on cid lands each cell in exactly one task → one file per
+    * cell, for one extra exchange at write time. */
+  private final case class IndexTable(name: String, schema: StructType,
+      byCell: Boolean = false) {
+    def write(df: DataFrame, root: String, mode: String = "overwrite"): Unit = {
+      val rows = df.select(schema.map(f => col(f.name).cast(f.dataType)): _*)
+      if (byCell) rows.repartition(col("cid")).write.mode(mode).partitionBy("cid")
+        .parquet(s"$root/$name")
+      else rows.write.mode(mode).parquet(s"$root/$name")
+    }
+    def read(spark: SparkSession, root: String): DataFrame =
+      spark.read.schema(schema).parquet(s"$root/$name")
+  }
+
+  /** The persisted index tables of IVF-SQ8, flat PQ and IVF-PQ. */
+  private object Index {
+    val Centroids = IndexTable("centroids", CentroidsSchema)
+    val Sq8Cells = IndexTable("cells", Sq8CellsSchema, byCell = true)
+    val PqCodes = IndexTable("codes", PqCodesSchema)
+    val PqBook = IndexTable("book", PqBookSchema)
+    val PqCells = IndexTable("cells", PqCellsSchema, byCell = true)
+  }
 
   /** L7e — product quantization with asymmetric distance (the PQ/ADC
     * of Jegou/Douze/Schmid, TPAMI 2011 — the composition ann_quantized
@@ -1074,9 +1116,7 @@ object Similarity {
       excludeSelf: Boolean = true): DataFrame = {
     // codebook = the seedCentroids sample (pqBook's "" key reproduces
     // md5(vec_id) order); encode + per-query ADC table + the coarse
-    // 8-lookup fixed-order score, shared with the IVF×PQ composition.
-    // The N-row encode is not staged: the recall gate's branch reuses
-    // the search's coarse exchange, so it runs once per execution
+    // 8-lookup fixed-order score, shared with the IVF×PQ composition
     val book = pqBook(emb, "")
     pqSearchFrom(pqEncode(emb, book), book, emb, queries,
       broadcastQueries, excludeSelf)
@@ -1088,20 +1128,10 @@ object Similarity {
     * the two can never drift on scoring, rerank, or the recall gate. */
   private def pqSearchFrom(enc: DataFrame, book: DataFrame, emb: DataFrame,
       queries: DataFrame, broadcastQueries: Boolean, excludeSelf: Boolean): DataFrame = {
-    val qt = pqTable(queries, book)
-    val coarse = dropSelf(pairQueries(enc, qt, broadcastQueries), excludeSelf, "qid", "vec_id")
-      .select(col("qid"), col("vec_id").as("nid"), adcScore.as("cscore"))
-    gateSampledRecall(
-      rerank(saltedTopK(coarse, col("cscore"), PqRerank).select(col("qid"), col("nid")),
-        emb, queries),
-      emb, queries, excludeSelf, "ann_pq")
+    val coarse = pairQueries(enc, pqTable(queries, book), broadcastQueries, excludeSelf,
+      adcScore.as("cscore"))
+    shortlist(coarse, PqRerank, emb, queries, excludeSelf, Some("ann_pq"))
   }
-
-  private[graft] val PqCodesSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("cd", ArrayType(IntegerType))))
-  private[graft] val PqBookSchema = StructType(
-    Seq(StructField("code", IntegerType), StructField("cv", ArrayType(DoubleType))) ++
-      (0 until PqM).map(m => StructField(s"c2_$m", DoubleType)))
 
   /** BUILD-ONCE lifecycle for the FLAT-PQ index — the codebook-train +
     * N-row encode are the whole corpus-proportional cost of pqSearch,
@@ -1112,9 +1142,8 @@ object Similarity {
     * skipping the train+encode, not the scan. */
   def buildPqIndex(emb: DataFrame, path: String): Unit = {
     val book = pqBook(emb, "")
-    indexRows(pqEncode(emb, book), PqCodesSchema)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    indexRows(book, PqBookSchema).write.mode("overwrite").parquet(s"$path/book")
+    Index.PqCodes.write(pqEncode(emb, book), path)
+    Index.PqBook.write(book, path)
   }
 
   /** Search a [[buildPqIndex]]-persisted index: identical results to
@@ -1125,8 +1154,7 @@ object Similarity {
       spark: SparkSession, path: String, emb: DataFrame, queries: DataFrame,
       broadcastQueries: Boolean = true, excludeSelf: Boolean = true): DataFrame = {
     ensureRegistered(spark)
-    pqSearchFrom(spark.read.schema(PqCodesSchema).parquet(s"$path/codes"),
-      spark.read.schema(PqBookSchema).parquet(s"$path/book"),
+    pqSearchFrom(Index.PqCodes.read(spark, path), Index.PqBook.read(spark, path),
       emb, queries, broadcastQueries, excludeSelf)
   }
 
@@ -1207,8 +1235,6 @@ object Similarity {
     // evaluated once per branch
     val asnR = residualAssign(emb, cent).stage()
     val rbook = pqBook(asnR.select(col("vec_id"), col("v")), "r")
-    // the encoded cell table is not staged: its one consumer is the
-    // search, whose coarse exchange the recall gate's branch reuses
     pqSearchCells(pqCellTable(asnR, rbook), cent, rbook, emb,
       queries, nProbes, excludeSelf)
   }
@@ -1238,27 +1264,16 @@ object Similarity {
   private def pqSearchCells(
       cellTable: DataFrame, cent: DataFrame, rbook: DataFrame, emb: DataFrame,
       queries: DataFrame, nProbes: Int, excludeSelf: Boolean): DataFrame = {
-    val cells = cellTable.withColumn("__cs",
-      pmod(col("nid"), lit(CellSalt)).cast("int"))
-    val qt = pqTable(queries, rbook)
     // per (query, probed cell): the dot(q, centroid) scalar
     val probes = probeCells(queries, cent, nProbes)
       .join(cent, "cid")
       .join(queries.select(col("vec_id").as("qid"), col("v").as("qv")), "qid")
       .select(col("qid"), col("cid"),
         call_function("vec_dot", col("qv"), col("cv")).as("dqc"))
-      .join(qt, "qid")
-      .withColumn("__cs", explode(sequence(lit(0), lit(CellSalt - 1))))
-    val coarse = dropSelf(cells.join(probes, Seq("cid", "__cs")), excludeSelf, "qid", "nid")
-      .select(col("qid"), col("nid"), (col("dqc") + adcScore).as("cscore"))
-    gateSampledRecall(
-      rerank(saltedTopK(coarse, col("cscore"), PqRerank).select(col("qid"), col("nid")),
-        emb, queries),
-      emb, queries, excludeSelf, "ann_ivf_pq")
+      .join(pqTable(queries, rbook), "qid")
+    val coarse = cellJoin(cellTable, probes, excludeSelf, (col("dqc") + adcScore).as("cscore"))
+    shortlist(coarse, PqRerank, emb, queries, excludeSelf, Some("ann_ivf_pq"))
   }
-
-  private[graft] val PqCellsSchema = StructType(Seq(StructField("nid", LongType),
-    StructField("cd", ArrayType(IntegerType)), StructField("cid", LongType)))
 
   /** BUILD-ONCE lifecycle for the residual-PQ inverted file — the PQ
     * twin of [[buildIvfIndex]]: assignment, residuals, and encoding
@@ -1275,10 +1290,9 @@ object Similarity {
     // index (append-vs-rebuild equality only makes sense under the
     // same book — codes are meaningless across books)
     val rbook = book.getOrElse(pqBook(asnR.select(col("vec_id"), col("v")), "r"))
-    indexRows(pqCellTable(asnR, rbook), PqCellsSchema)
-      .write.mode("overwrite").partitionBy("cid").parquet(s"$path/cells")
-    indexRows(cent, CentroidsSchema).write.mode("overwrite").parquet(s"$path/centroids")
-    indexRows(rbook, PqBookSchema).write.mode("overwrite").parquet(s"$path/book")
+    Index.PqCells.write(pqCellTable(asnR, rbook), path)
+    Index.Centroids.write(cent, path)
+    Index.PqBook.write(rbook, path)
   }
 
   /** INCREMENTAL maintenance of the PQ index: delta vectors are
@@ -1288,17 +1302,16 @@ object Similarity {
     * over the combined corpus (spec-asserted). */
   def appendToIvfPqIndex(spark: SparkSession, embDelta: DataFrame, path: String): Unit = {
     ensureRegistered(spark)
-    val cent = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
-    val rbook = spark.read.schema(PqBookSchema).parquet(s"$path/book")
-    indexRows(pqCellTable(residualAssign(embDelta, cent), rbook), PqCellsSchema)
-      .write.mode("append").partitionBy("cid").parquet(s"$path/cells")
+    val cells = pqCellTable(residualAssign(embDelta, Index.Centroids.read(spark, path)),
+      Index.PqBook.read(spark, path))
+    Index.PqCells.write(cells, path, "append")
   }
 
   /** Nightly maintenance for a persisted index (IVF-SQ8 or IVF-PQ —
     * both share the `cells/cid=` layout): every [[appendToIvfIndex]] /
-    * [[appendToIvfPqIndex]] delta writes one file per task per touched
-    * cell, so a month of daily ingestion turns each cell into dozens
-    * of KB-files and every probed-cell scan pays listing + footer
+    * [[appendToIvfPqIndex]] delta writes one file per touched cell, so
+    * a month of daily ingestion turns each cell into dozens of
+    * KB-files and every probed-cell scan pays listing + footer
     * overhead per file. This bin-packs the small files inside each
     * `cid=` partition via the warehouse's swap-journaled compaction
     * (R12): searches before and after are IDENTICAL (set-union of the
@@ -1311,15 +1324,6 @@ object Similarity {
       targetBytes: Long = 128L << 20): Warehouse.CompactReport =
     Warehouse.compactPartitionedSmallFiles(spark, s"$path/cells", smallBytes, targetBytes)
 
-  /** Per-JVM staged-index root over `dir`'s embeddings — the shared
-    * [[Staging]] machinery (fingerprint + appId keying, JVM-exit
-    * sweep), embeddings-keyed for the ANN seats. */
-  private def stagedRoot(spark: SparkSession, dir: String, kind: String): String =
-    Staging.stagedRoot(spark, dir, kind, "embeddings.parquet")
-
-  private def ensureBuilt(spark: SparkSession, root: String)(build: String => Unit): String =
-    Staging.ensureBuilt(spark, root)(build)
-
   /** Search a [[buildIvfPqIndex]]-persisted index: identical results
     * to the dynamic [[ivfPqSearch]], no assignment or encode stage in
     * the plan, probed `cid=` partitions pruned at runtime. */
@@ -1327,10 +1331,8 @@ object Similarity {
       spark: SparkSession, path: String, emb: DataFrame, queries: DataFrame,
       nProbes: Int = SqNumProbes, excludeSelf: Boolean = true): DataFrame = {
     ensureRegistered(spark)
-    pqSearchCells(spark.read.schema(PqCellsSchema).parquet(s"$path/cells"),
-      spark.read.schema(CentroidsSchema).parquet(s"$path/centroids"),
-      spark.read.schema(PqBookSchema).parquet(s"$path/book"),
-      emb, queries, nProbes, excludeSelf)
+    pqSearchCells(Index.PqCells.read(spark, path), Index.Centroids.read(spark, path),
+      Index.PqBook.read(spark, path), emb, queries, nProbes, excludeSelf)
   }
 
   /** Cosine threshold for the semantic-dedup drop rule — the driver
@@ -1374,22 +1376,16 @@ object Similarity {
     val asnV = (twoLevel match {
       case Some((fineK, coarseG)) => assignTwoLevel(emb, cent, fineK, coarseG)
         .select(col("vec_id"), col("cid"), col("v"))
-      case None => scoredByCent(emb, cent, col("v"))
-        .groupBy(col("vec_id"))
-        .agg(max_by(col("cid"), bestCent).as("cid"), first(col("v")).as("v"))
+      case None => assign(emb, cent, "v")
     }).cache()
     val ids = asnV.select(col("vec_id"), col("cid"))
-    // salted in-cell self-join on ids: the keeper side replicates
-    // CellSalt ways, the candidate side keys on pmod(id) — K·CellSalt
-    // shuffle keys (small K never serializes the corpus), and each
-    // (ka < kb) cell pair appears exactly once
-    val keepSide = ids.select(col("vec_id").as("ka"), col("cid"))
-      .withColumn("__cs", explode(sequence(lit(0), lit(CellSalt - 1))))
-    val candSide = ids.select(col("vec_id").as("kb"), col("cid"))
-      .withColumn("__cs", pmod(col("kb"), lit(CellSalt)).cast("int"))
-    val cand = keepSide.join(candSide, Seq("cid", "__cs"))
-      .filter(col("ka") < col("kb"))
-      .select(col("ka"), col("kb"))
+    // the salted cell join as an in-cell self-join on ids: the keeper
+    // side is the replicated probe side, and each (ka < kb) cell pair
+    // appears exactly once
+    val cand = cellJoin(ids.select(col("vec_id").as("nid"), col("cid")),
+      ids.select(col("vec_id").as("qid"), col("cid")), excludeSelf = false)
+      .filter(col("qid") < col("nid"))
+      .select(col("qid").as("ka"), col("nid").as("kb"))
     val qcos = Portable.quant6(cosine(col("va"), col("vb")))
     val dup = cand
       .join(asnV.select(col("vec_id").as("ka"), col("v").as("va")), "ka")
@@ -1592,34 +1588,6 @@ object Similarity {
       .orderBy(md5(concat(lit("anngate"), col("vec_id").cast("string"))), col("vec_id"))
       .limit(GateSampleQ)
 
-  /** Attach the sampled-recall gate to a search result: the gate frame
-    * rides the returned plan as a broadcast one-row cross join (the
-    * audit-gate mechanics — assert_true inside the frame's filter, so
-    * a collapsed recall aborts every execution path while a healthy
-    * one passes rows through byte-identical). The approximate side is
-    * the result itself restricted to the sampled query ids (a
-    * broadcast semi-join), not a second run of the search: every gated
-    * path is per-query independent — ADC tables, cell probes, the
-    * salted top-R and the rerank are all partitioned by query id — so
-    * those rows ARE what the search returns for the sample alone
-    * (GatesSpec-asserted), and AQE stage reuse serves the gate branch
-    * from the result's exchanges instead of repeating its corpus scan.
-    * (Not when the corpus relation is `.cache()`d: each in-memory scan
-    * becomes its own table-cache stage, the branch no longer matches,
-    * and it recomputes — same rows, more work.) Only the exact side
-    * (GateSampleQ·N dots) is extra work. */
-  private def gateSampledRecall(result: DataFrame, emb: DataFrame,
-      queries: DataFrame, excludeSelf: Boolean, query: String,
-      gateFloor: Double = AnnGateFloor): DataFrame = {
-    val sample = gateSample(queries)
-    val frame = sampledRecallFrame(
-      bruteForce(emb, sample, broadcastQueries = true, excludeSelf),
-      result.join(broadcast(sample.select(col("vec_id").as("query_id"))),
-        Seq("query_id"), "left_semi"),
-      query, gateFloor)
-    result.crossJoin(broadcast(frame.select(lit(1).as("__gate")))).drop("__gate")
-  }
-
   /** semantic_assign_audit's scored tail over the two assignment
     * frames (vec_id, cid_*, score_*) — separated so the gate spec can
     * drive the IDENTICAL gated plan with a degraded `two` side and
@@ -1670,9 +1638,6 @@ object Similarity {
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
   }
 
-  /** Oracle CTEs shared by the IVF family: float vectors `e`, the
-    * fixed-K centroid sample `c`, the nearest-cell assignment `asn`,
-    * and the query probe list `qprobe` over `nProbes` cells. */
   /** The float-vector / fixed-K-centroid / nearest-cell-assignment CTE
     * block (`e`, `c`, `asn`) — shared by [[ivfCtes]] and the
     * `ann_cell_census` oracle so the assignment replay can never drift
@@ -1688,6 +1653,9 @@ object Similarity {
        |   FROM e, c) t WHERE rn = 1)""".stripMargin
   }
 
+  /** Oracle CTEs shared by the IVF family: [[ivfAsnCtes]] plus the
+    * query probe list `qprobe` over `nProbes` cells, after the query
+    * sample `qs` unless the caller already has it. */
   private def ivfCtes(nProbes: Int, withQs: Boolean = true): String = {
     val qc = quantCos.format("e.v", "c.cv")
     val qsPrefix = if (withQs) s"$qsCte,\n" else ""
@@ -1732,6 +1700,52 @@ object Similarity {
       |              list_transform(v, x -> greatest(least(floor(x * 127.0), 127.0), -128.0)) AS qv
       |       FROM e)""".stripMargin
 
+  /** Oracle top-k tail over a scored (qid, nid, score) CTE `from`. */
+  private def topKSql(from: String): String =
+    s"""r AS (SELECT qid, nid, score,
+       |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
+       |      FROM $from)
+       |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
+       |FROM r WHERE rn <= $TopK""".stripMargin
+
+  /** Oracle twin of [[shortlist]] over a coarse `co(qid, nid, cscore)`. */
+  private def shortlistSql(width: Int): String =
+    s"""ck AS (SELECT qid, nid FROM (
+       |   SELECT qid, nid,
+       |          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cscore DESC, nid) AS crn
+       |   FROM co) t WHERE crn <= $width),
+       |sc AS (SELECT ck.qid, ck.nid,
+       |              ${quantCos.format("eq.v", "en.v")} AS score
+       |       FROM ck JOIN e eq ON eq.vec_id = ck.qid JOIN e en ON en.vec_id = ck.nid),
+       |${topKSql("sc")}""".stripMargin
+
+  /** Oracle twin of [[pqEncode]]: `enc(vec_id, cd)` of `rel.v` against book `b`. */
+  private def pqEncCtes(rel: String, v: String, b: String): String = {
+    val mSub = s"m.m * $PqSub + 1 : m.m * $PqSub + $PqSub"
+    s"""sub AS (SELECT $rel.vec_id, $b.code, m.m,
+       |               list_inner_product($b.cv[$mSub], $b.cv[$mSub])
+       |               - 2 * list_inner_product($rel.$v[$mSub], $b.cv[$mSub]) AS s
+       |        FROM $rel, $b, generate_series(0, ${PqM - 1}) m(m)),
+       |enc AS (SELECT vec_id, list(code ORDER BY m) AS cd FROM (
+       |          SELECT vec_id, m, code,
+       |                 ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY s, code) AS rn
+       |          FROM sub) t WHERE rn = 1 GROUP BY vec_id)""".stripMargin
+  }
+
+  /** Oracle twin of [[pqTable]]: `qt(qid, t)` against book `b`. */
+  private def pqTableCtes(b: String): String =
+    s"""qd AS (SELECT e.vec_id AS qid, $b.code,
+       |              list_transform(generate_series(0, ${PqM - 1}),
+       |                m -> list_inner_product(e.v[m * $PqSub + 1 : m * $PqSub + $PqSub],
+       |                                        $b.cv[m * $PqSub + 1 : m * $PqSub + $PqSub])) AS dv
+       |       FROM e, $b WHERE e.vec_id IN (SELECT vec_id FROM qs)),
+       |qt AS (SELECT qid, flatten(list(dv ORDER BY code)) AS t FROM qd GROUP BY qid)""".stripMargin
+
+  /** Oracle twin of [[adcScore]]: the fixed-order lookup chain. */
+  private def adcChainSql: String = (0 until PqM)
+    .map(m => s"qt.t[enc.cd[${m + 1}] * $PqM + ${m + 1}]")
+    .mkString(" + ")
+
   /** The IVFADC (IVF×SQ8) oracle — shared verbatim by `ann_ivf_sq8`
     * and `ann_index_lifecycle`: the persisted build→append→compact→
     * search cycle is bit-identity-preserving, so one SQL definition
@@ -1744,18 +1758,7 @@ object Similarity {
        |       JOIN asn a ON a.cid = q.cid AND a.vec_id <> q.qid
        |       JOIN qz z ON z.vec_id = a.vec_id
        |       JOIN qz zq ON zq.vec_id = q.qid),
-       |ck AS (SELECT qid, nid FROM (
-       |   SELECT qid, nid,
-       |          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cscore DESC, nid) AS crn
-       |   FROM co) t WHERE crn <= $SqRerankK),
-       |sc AS (SELECT ck.qid, ck.nid,
-       |              ${quantCos.format("eq.v", "en.v")} AS score
-       |       FROM ck JOIN e eq ON eq.vec_id = ck.qid JOIN e en ON en.vec_id = ck.nid),
-       |r AS (SELECT qid, nid, score,
-       |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-       |      FROM sc)
-       |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-       |FROM r WHERE rn <= $TopK""".stripMargin
+       |${shortlistSql(SqRerankK)}""".stripMargin
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -1775,11 +1778,7 @@ object Similarity {
          |              ${quantCos.format("eq.v", "en.v")} AS score
          |       FROM cand JOIN e eq ON eq.vec_id = cand.qid
          |                 JOIN e en ON en.vec_id = cand.nid),
-         |r AS (SELECT qid, nid, score,
-         |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-         |      FROM sc)
-         |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-         |FROM r WHERE rn <= $TopK""".stripMargin) { (spark, dir) =>
+         |${topKSql("sc")}""".stripMargin) { (spark, dir) =>
       val emb = embV(spark, dir)
       ivfSearch(emb, seedCentroids(emb), defaultQueries(emb))
     },
@@ -1848,11 +1847,11 @@ object Similarity {
     // sequentially in Verify, Bench, and the test suite).
     QueryDef("ann_index_lifecycle", ivfSq8Sql) { (spark, dir) =>
       val emb = embV(spark, dir)
-      val root = stagedRoot(spark, dir, "lifecycle")
+      val root = Staging.stagedRoot(spark, dir, "lifecycle", "embeddings.parquet")
       val conf = spark.sessionState.newHadoopConf()
       val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
       val base = new org.apache.hadoop.fs.Path(
-        ensureBuilt(spark, s"$root/base")(b =>
+        Staging.ensureBuilt(spark, s"$root/base")(b =>
           buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(10)) =!= 7),
             seedCentroids(emb), b)))
       val work = new org.apache.hadoop.fs.Path(s"$root/work")
@@ -1866,7 +1865,7 @@ object Similarity {
       Staging.linkOrCopyTree(fs, base, work, conf)
       // centroids are FROZEN across appends — read + cache them once
       // instead of a schema-infer + scan job per delta (r16)
-      val centW = spark.read.schema(CentroidsSchema).parquet(s"$work/centroids").cache()
+      val centW = Index.Centroids.read(spark, work.toString).cache()
       try {
         Seq(7L, 17L, 27L).foreach { m =>
           appendToIvfIndex(spark, emb.filter(pmod(col("vec_id"), lit(30)) === m),
@@ -1881,10 +1880,6 @@ object Similarity {
     QueryDef(
       "ann_ivf_pq", {
         val qc = quantCos.format("e.v", "c.cv")
-        val adcChain = (0 until PqM)
-          .map(m => s"qt.t[enc.cd[${m + 1}] * $PqM + ${m + 1}]")
-          .mkString(" + ")
-        val mSub = s"m.m * $PqSub + 1 : m.m * $PqSub + $PqSub"
         s"""WITH $qsCte,
            |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
            |c AS (SELECT vec_id AS cid, v AS cv FROM e
@@ -1899,42 +1894,19 @@ object Similarity {
            |rc AS (SELECT vec_id, r FROM resid
            |       ORDER BY md5('r' || CAST(vec_id AS VARCHAR)), vec_id LIMIT $PqCodes),
            |rb AS (SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS code, r AS cv FROM rc),
-           |sub AS (SELECT resid.vec_id, rb.code, m.m,
-           |               list_inner_product(rb.cv[$mSub], rb.cv[$mSub])
-           |               - 2 * list_inner_product(resid.r[$mSub], rb.cv[$mSub]) AS s
-           |        FROM resid, rb, generate_series(0, ${PqM - 1}) m(m)),
-           |enc AS (SELECT vec_id, list(code ORDER BY m) AS cd FROM (
-           |          SELECT vec_id, m, code,
-           |                 ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY s, code) AS rn
-           |          FROM sub) t WHERE rn = 1 GROUP BY vec_id),
+           |${pqEncCtes("resid", "r", "rb")},
            |qprobe AS (SELECT vec_id AS qid, cid FROM (
            |   SELECT e.vec_id, c.cid,
            |          ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY $qc DESC, c.cid) AS rn
            |   FROM e, c WHERE e.vec_id IN (SELECT vec_id FROM qs)) t WHERE rn <= $PqNumProbes),
-           |qd AS (SELECT e.vec_id AS qid, rb.code,
-           |              list_transform(generate_series(0, ${PqM - 1}),
-           |                m -> list_inner_product(e.v[m * $PqSub + 1 : m * $PqSub + $PqSub],
-           |                                        rb.cv[m * $PqSub + 1 : m * $PqSub + $PqSub])) AS dv
-           |       FROM e, rb WHERE e.vec_id IN (SELECT vec_id FROM qs)),
-           |qt AS (SELECT qid, flatten(list(dv ORDER BY code)) AS t FROM qd GROUP BY qid),
+           |${pqTableCtes("rb")},
            |dqc AS (SELECT q.qid, q.cid, list_inner_product(e.v, c.cv) AS d
            |        FROM qprobe q JOIN e ON e.vec_id = q.qid JOIN c ON c.cid = q.cid),
-           |co AS (SELECT dqc.qid, a.vec_id AS nid, dqc.d + ($adcChain) AS cscore
+           |co AS (SELECT dqc.qid, a.vec_id AS nid, dqc.d + ($adcChainSql) AS cscore
            |       FROM dqc JOIN resid a ON a.cid = dqc.cid AND a.vec_id <> dqc.qid
            |       JOIN enc ON enc.vec_id = a.vec_id
            |       JOIN qt ON qt.qid = dqc.qid),
-           |ck AS (SELECT qid, nid FROM (
-           |   SELECT qid, nid,
-           |          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cscore DESC, nid) AS crn
-           |   FROM co) t WHERE crn <= $PqRerank),
-           |sc AS (SELECT ck.qid, ck.nid,
-           |              ${quantCos.format("eq.v", "en.v")} AS score
-           |       FROM ck JOIN e eq ON eq.vec_id = ck.qid JOIN e en ON en.vec_id = ck.nid),
-           |r AS (SELECT qid, nid, score,
-           |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-           |      FROM sc)
-           |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-           |FROM r WHERE rn <= $TopK""".stripMargin
+           |${shortlistSql(PqRerank)}""".stripMargin
       }) { (spark, dir) =>
       // the driver-checked seat serves from the PERSISTED index (r12
       // verdict: the dynamic form retrained the codebook and re-encoded
@@ -1946,59 +1918,33 @@ object Similarity {
       // bit-identical to ivfPqSearch (ScaleSpec), so the oracle hash
       // is unchanged.
       val emb = embV(spark, dir)
-      val root = ensureBuilt(spark, stagedRoot(spark, dir, "ivfpq"))(r =>
+      val root = Staging.ensureBuilt(spark,
+        Staging.stagedRoot(spark, dir, "ivfpq", "embeddings.parquet"))(r =>
         buildIvfPqIndex(emb, seedCentroids(emb), r))
       searchIvfPqIndex(spark, root, emb, defaultQueries(emb), nProbes = PqNumProbes)
     },
 
     // L7e — product quantization + ADC (see pqSearch).
     QueryDef(
-      "ann_pq", {
-        val adcChain = (0 until PqM)
-          .map(m => s"qt.t[enc.cd[${m + 1}] * $PqM + ${m + 1}]")
-          .mkString(" + ")
-        val mSub = s"m.m * $PqSub + 1 : m.m * $PqSub + $PqSub"
-        s"""WITH $qsCte,
-           |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-           |c AS (SELECT vec_id AS cid, v AS cv FROM e
-           |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $PqCodes),
-           |b AS (SELECT ROW_NUMBER() OVER (ORDER BY cid) - 1 AS code, cv FROM c),
-           |sub AS (SELECT e.vec_id, b.code, m.m,
-           |               list_inner_product(b.cv[$mSub], b.cv[$mSub])
-           |               - 2 * list_inner_product(e.v[$mSub], b.cv[$mSub]) AS s
-           |        FROM e, b, generate_series(0, ${PqM - 1}) m(m)),
-           |enc AS (SELECT vec_id, list(code ORDER BY m) AS cd FROM (
-           |          SELECT vec_id, m, code,
-           |                 ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY s, code) AS rn
-           |          FROM sub) t WHERE rn = 1 GROUP BY vec_id),
-           |qd AS (SELECT e.vec_id AS qid, b.code,
-           |              list_transform(generate_series(0, ${PqM - 1}),
-           |                m -> list_inner_product(e.v[m * $PqSub + 1 : m * $PqSub + $PqSub],
-           |                                        b.cv[m * $PqSub + 1 : m * $PqSub + $PqSub])) AS dv
-           |       FROM e, b WHERE e.vec_id IN (SELECT vec_id FROM qs)),
-           |qt AS (SELECT qid, flatten(list(dv ORDER BY code)) AS t FROM qd GROUP BY qid),
-           |co AS (SELECT qt.qid, enc.vec_id AS nid, $adcChain AS cscore
-           |       FROM enc, qt WHERE enc.vec_id <> qt.qid),
-           |ck AS (SELECT qid, nid FROM (
-           |   SELECT qid, nid,
-           |          ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cscore DESC, nid) AS crn
-           |   FROM co) t WHERE crn <= $PqRerank),
-           |sc AS (SELECT ck.qid, ck.nid,
-           |              ${quantCos.format("eq.v", "en.v")} AS score
-           |       FROM ck JOIN e eq ON eq.vec_id = ck.qid JOIN e en ON en.vec_id = ck.nid),
-           |r AS (SELECT qid, nid, score,
-           |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-           |      FROM sc)
-           |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-           |FROM r WHERE rn <= $TopK""".stripMargin
-      }) { (spark, dir) =>
+      "ann_pq",
+      s"""WITH $qsCte,
+         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+         |c AS (SELECT vec_id AS cid, v AS cv FROM e
+         |      ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $PqCodes),
+         |b AS (SELECT ROW_NUMBER() OVER (ORDER BY cid) - 1 AS code, cv FROM c),
+         |${pqEncCtes("e", "v", "b")},
+         |${pqTableCtes("b")},
+         |co AS (SELECT qt.qid, enc.vec_id AS nid, $adcChainSql AS cscore
+         |       FROM enc, qt WHERE enc.vec_id <> qt.qid),
+         |${shortlistSql(PqRerank)}""".stripMargin) { (spark, dir) =>
       // persisted-index seat, same rationale as ann_ivf_pq: codebook
       // train + N-row encode are paid once per (corpus fingerprint,
       // JVM); timed runs price the ADC scan + rerank. searchPqIndex is
       // bit-identical to pqSearch (spec-asserted), so the oracle hash
       // is unchanged.
       val emb = embV(spark, dir)
-      val root = ensureBuilt(spark, stagedRoot(spark, dir, "pq"))(r =>
+      val root = Staging.ensureBuilt(spark,
+        Staging.stagedRoot(spark, dir, "pq", "embeddings.parquet"))(r =>
         buildPqIndex(emb, r))
       searchPqIndex(spark, root, emb, defaultQueries(emb))
     },
@@ -2025,11 +1971,7 @@ object Similarity {
          |sc AS (SELECT ck.qid, ck.nid,
          |              floor(list_cosine_similarity(ea.v, eb.v) * 1000000.0) / 1000000.0 AS score
          |       FROM ck JOIN e ea ON ea.vec_id = ck.qid JOIN e eb ON eb.vec_id = ck.nid),
-         |r AS (SELECT qid, nid, score,
-         |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-         |      FROM sc)
-         |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-         |FROM r WHERE rn <= $TopK""".stripMargin) { (spark, dir) =>
+         |${topKSql("sc")}""".stripMargin) { (spark, dir) =>
       val emb = embV(spark, dir)
       quantizedSearch(emb, defaultQueries(emb))
     },
@@ -2229,11 +2171,7 @@ object Similarity {
          |c AS (SELECT q.qid, e.vec_id AS nid,
          |             floor(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qe) * 1000000.0) / 1000000.0 AS score
          |      FROM embeddings e, q WHERE e.vec_id <> q.qid),
-         |r AS (SELECT qid, nid, score,
-         |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-         |      FROM c)
-         |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-         |FROM r WHERE rn <= $TopK""".stripMargin) { (spark, dir) =>
+         |${topKSql("c")}""".stripMargin) { (spark, dir) =>
       val emb = embV(spark, dir)
       bruteForce(emb, defaultQueries(emb))
     },
@@ -2244,19 +2182,8 @@ object Similarity {
       "ann_lsh",
       s"""WITH $qsCte,
          |$bucketCtes,
-         |cand AS (SELECT DISTINCT qb.vec_id AS qid, vb.vec_id AS nid
-         |         FROM bkt qb JOIN bkt vb
-         |           ON qb.t = vb.t AND qb.bucket = vb.bucket AND qb.vec_id <> vb.vec_id
-         |         WHERE qb.vec_id IN (SELECT vec_id FROM qs)),
-         |sc AS (SELECT c.qid, c.nid, ${Portable.Quant6Sql(cosSql)} AS score
-         |       FROM cand c
-         |       JOIN embeddings ea ON ea.vec_id = c.qid
-         |       JOIN embeddings eb ON eb.vec_id = c.nid),
-         |r AS (SELECT qid, nid, score,
-         |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
-         |      FROM sc)
-         |SELECT qid AS query_id, nid AS neighbor_id, CAST(rn AS BIGINT) AS rank, score
-         |FROM r WHERE rn <= $TopK""".stripMargin) { (spark, dir) =>
+         |$lshScoredCtes,
+         |${topKSql("sc")}""".stripMargin) { (spark, dir) =>
       lshSearch(spark, dir)
     },
 
@@ -2598,14 +2525,7 @@ object Similarity {
       "ann_audit",
       s"""WITH $qsCte,
          |$bucketCtes,
-         |cand AS (SELECT DISTINCT qb.vec_id AS qid, vb.vec_id AS nid
-         |         FROM bkt qb JOIN bkt vb
-         |           ON qb.t = vb.t AND qb.bucket = vb.bucket AND qb.vec_id <> vb.vec_id
-         |         WHERE qb.vec_id IN (SELECT vec_id FROM qs)),
-         |sc AS (SELECT c.qid, c.nid, ${Portable.Quant6Sql(cosSql)} AS score
-         |       FROM cand c
-         |       JOIN embeddings ea ON ea.vec_id = c.qid
-         |       JOIN embeddings eb ON eb.vec_id = c.nid),
+         |$lshScoredCtes,
          |r AS (SELECT qid, nid,
          |             ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, nid) AS rn
          |      FROM sc),

@@ -197,9 +197,12 @@ class GatesSpec extends SparkSuite {
     val annPq = SparkEntry.queries("ann_pq")
     annPq(spark, sf0001).collect() // cold: builds (or finds) the staged index
     val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
         j.stageInfos.foreach(s => sites.add(s.name))
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -211,5 +214,11 @@ class GatesSpec extends SparkSuite {
       .filter(_.startsWith("parquet at Similarity.scala"))
     assert(schemaJobs.isEmpty,
       s"the staged index must be read with its written schema: ${schemaJobs.mkString(", ")}")
+    // the warm job count of this call at commit 0025c09 (sf0.001, this
+    // suite's local[4] session), before the ANN searches shared one
+    // search spine: serving the staged index must not take more jobs
+    val parentWarmJobs = 14
+    assert(jobs.get <= parentWarmJobs,
+      s"a warm ann_pq call ran ${jobs.get} jobs, more than the $parentWarmJobs it ran before")
   }
 }

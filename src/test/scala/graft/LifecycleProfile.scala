@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Similarity, Staging}
 
@@ -11,13 +10,7 @@ import graft.operators.{Similarity, Staging}
 object LifecycleProfile {
   def main(args: Array[String]): Unit = {
     val dir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     graft.functions.VectorOps.ensureRegistered(spark)
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -17,13 +17,7 @@ import graft.operators.Similarity
   */
 object RecallTable {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     graft.functions.VectorOps.ensureRegistered(spark)
     println(f"${"dir"}%-18s ${"method"}%-12s ${"n_vecs"}%8s  score_recall")
     for (dir <- args) {
