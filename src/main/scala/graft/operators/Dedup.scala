@@ -124,15 +124,12 @@ object Dedup {
   }
 
   /** Split-only tokenization WITHOUT [[tokenized]]'s doc_id
-    * repartition, for relations consumed ONLY through doc_id
-    * semi-joins (the incremental path's verify side): the broadcast
-    * semi filter then runs at scan speed and only the surviving
-    * (candidate) docs ever split/explode — where the repartition form
-    * would shuffle the WHOLE corpus text before the filter, making
-    * every delta run pay an O(corpus) exchange (caught by r14's cpu_s
-    * numbers: the staged dedup_incremental seat still burned
-    * corpus-proportional CPU). The full pipeline keeps [[tokenized]] —
-    * it explodes every doc, so co-partitioning up front is right. */
+    * repartition, for BOUNDED relations: the delta batch ([[signDelta]])
+    * and the docs the incremental verify's broadcast candidate join
+    * matched ([[incrementalVerdict]], which splits only after that join,
+    * so unmatched corpus text is streamed past and never tokenized).
+    * The full pipeline keeps [[tokenized]] — it explodes every doc, so
+    * co-partitioning up front is right. */
   private def tokenizedAtScan(docs: DataFrame): DataFrame = {
     graft.functions.VecExpressions.register(docs.sparkSession)
     docs.withColumn("tk", split(col("text"), " ")).drop("text")
@@ -287,35 +284,45 @@ object Dedup {
     * pairs and joins its tokens, its distinct packed shingle keys
     * (`array_distinct(shingle_keys(…))`) are computed once for the doc,
     * and the pairs regroup with both docs' arrays to be scored by
-    * `size(array_intersect(…))` — the same integers as exploding the
-    * shingle sets, self-joining them per pair and counting, without the
-    * shingle-row shuffles, and one plan copy of the candidate generator
-    * instead of one per consumer (planning, not execution, was the
-    * cost of the copies). Verify work scales with the true duplicate
-    * mass, not the corpus; the tok join is left to AQE (broadcast while
-    * sparse, keyed when a dup-heavy corpus makes the candidate set
-    * corpus-sized). A pair whose doc is missing from `tok` drops, as
-    * under an inner join. Returns cand's columns plus n_common and
-    * jaccard, one row per distinct pair (duplicate cand rows collapse
-    * in the regroup), filtered to jaccard >= [[JaccardThreshold]]. */
+    * [[overlap]] — the same integers as exploding the shingle sets,
+    * self-joining them per pair and counting, without the shingle-row
+    * shuffles. Verify work scales with the true duplicate mass, not the
+    * corpus; the tok join is left to AQE (broadcast while sparse, keyed
+    * when a dup-heavy corpus makes the candidate set corpus-sized). A
+    * pair whose doc is missing from `tok` drops, as under an inner join.
+    * Returns cand's columns plus n_common and jaccard, one row per
+    * distinct pair (duplicate cand rows collapse in the regroup),
+    * filtered to jaccard >= [[JaccardThreshold]]. The incremental screen
+    * verifies its bounded candidates with the same scoring through a
+    * broadcast instead ([[incrementalVerdict]]). */
   private[graft] def verifiedPairs(cand: DataFrame, tok: DataFrame): DataFrame = {
     val cols = cand.columns.toSeq
     def keysOf(side: String) = max(when(col("doc_id") === col(s"p.$side"), col("w")))
-    val scored = cand
+    val (verified, nCommon, jaccard) = overlap(col("wa"), col("wb"))
+    cand
       .select(struct(cols.map(col): _*).as("p"), explode(array(col("da"), col("db"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(collect_list(col("p")).as("ps"))
       .join(tok, Seq("doc_id"))
       // the key array is computed per DOC, before fanning out to its pairs
-      .select(col("doc_id"), col("ps"), array_distinct(expr(shingleKeysTransform)).as("w"))
+      .select(col("doc_id"), col("ps"), shingleKeyArray.as("w"))
       .select(col("doc_id"), explode(col("ps")).as("p"), col("w"))
       .groupBy(col("p")).agg(keysOf("da").as("wa"), keysOf("db").as("wb"))
-    val nCommon = size(array_intersect(col("wa"), col("wb")))
-    val jac = nCommon.cast("double") / (size(col("wa")) + size(col("wb")) - nCommon)
-    scored
-      .filter(col("wa").isNotNull && col("wb").isNotNull && jac >= JaccardThreshold)
-      .select(cols.map(c => col(s"p.$c")) ++ Seq(
-        nCommon.cast("long").as("n_common"),
-        graft.functions.Portable.quant6(jac).as("jaccard")): _*)
+      .filter(verified)
+      .select(cols.map(c => col(s"p.$c")) ++ Seq(nCommon.as("n_common"), jaccard.as("jaccard")): _*)
+  }
+
+  /** A doc's distinct packed shingle keys, over its `tk` column. */
+  private def shingleKeyArray: Column = array_distinct(expr(shingleKeysTransform))
+
+  /** The exact-Jaccard scoring both verify paths share, over two docs'
+    * [[shingleKeyArray]]s: (verified — both present and jaccard >=
+    * [[JaccardThreshold]], n_common as BIGINT, jaccard quantized as the
+    * oracle's). */
+  private def overlap(wa: Column, wb: Column): (Column, Column, Column) = {
+    val n = size(array_intersect(wa, wb))
+    val jac = n.cast("double") / (size(wa) + size(wb) - n)
+    (wa.isNotNull && wb.isNotNull && jac >= JaccardThreshold,
+      n.cast("long"), graft.functions.Portable.quant6(jac))
   }
 
   // ---- L2c: incremental near-dedup (delta batch vs screened corpus) ----
@@ -356,84 +363,102 @@ object Dedup {
     * build/serve split as [[graft.operators.Similarity.buildIvfIndex]]
     * and the warehouse's bucketed tables. */
   def buildDedupIndex(docs: DataFrame, path: String): Unit =
-    writeIndex(bandKeysFrom(tokenized(docs.select(col("doc_id"), col("text")))), path)
+    // Output-sizing exchange (r17): the signature COMPUTE runs at the
+    // pinned tokenized parallelism, but the index payload is 4 narrow
+    // rows/doc — written straight off the compute stage it lands as one
+    // near-empty file per task, and every later serving read pays
+    // listing/footer overhead per file. The unpinned repartition lets
+    // AQE size the output by bytes (the write-side twin of guide §6 "aim
+    // for output files in the 128 MB-1 GB range"); band_key is the
+    // downstream join key, costless to cluster by while the rows move
+    // anyway.
+    bandKeysFrom(tokenized(docs.select(col("doc_id"), col("text"))))
+      .repartition(col("band_key")).write.mode("overwrite").parquet(path)
 
-  /** Write a (doc_id, band_key) relation as an index partition.
-    * Output-sizing exchange (r17): the signature COMPUTE runs at the
-    * pinned tokenized parallelism, but the index payload is 4 narrow
-    * rows/doc — written straight off the compute stage it lands as one
-    * near-empty file per task, and every later serving read pays
-    * listing/footer overhead per file. The unpinned repartition lets
-    * AQE size the output by bytes (the write-side twin of guide §6 "aim
-    * for output files in the 128 MB-1 GB range"); band_key is the
-    * downstream join key, costless to cluster by while the rows move
-    * anyway. */
-  private[graft] def writeIndex(keys: DataFrame, path: String): Unit =
-    keys.repartition(col("band_key")).write.mode("overwrite").parquet(path)
-
-  /** Sign a DELTA batch once: its (doc_id, band_key) LSH keys, staged
-    * (localCheckpoint — DeltaSample-scale, 4 rows per doc). The staged
-    * relation serves both the screen ([[screenDelta]]) and, minus the
-    * duplicates, the delta's own index partition, so no doc is
-    * tokenized and minhashed twice. Bounded input, so the
-    * AQE-coalescable `spread = false` tokenization. */
-  def signDelta(delta: DataFrame): DataFrame =
-    bandKeysFrom(tokenized(delta.select(col("doc_id"), col("text")), spread = false)).stage()
+  /** Sign a DELTA batch once: its (doc_id, band_key) LSH keys, collected
+    * into a local relation — 4 rows per doc, the bytes a broadcast of
+    * them would hold anyway. The local relation serves the
+    * screen ([[screenDelta]]: its band keys restrict the index) and,
+    * minus the duplicates, the delta's own index partition, so no
+    * doc is tokenized and minhashed twice. Bounded input, so the
+    * signature stage runs in the delta's own partitions (no
+    * repartition). */
+  def signDelta(delta: DataFrame): DataFrame = {
+    val keys = bandKeysFrom(tokenizedAtScan(delta.select(col("doc_id"), col("text"))))
+    delta.sparkSession.createDataFrame(java.util.Arrays.asList(keys.collect(): _*), keys.schema)
+  }
 
   /** Candidate pairs of a signed delta against the indexed corpus and
-    * its own earlier docs, verified: `oldKeys` is the persisted index
-    * relation (doc_id, band_key), `newKeys` the staged delta keys
-    * ([[signDelta]]), both screened in one [[bucketPairs]] pass — the
-    * hot-bucket cap counts over the COMBINED key set, so the incremental
-    * run prunes exactly the buckets the full-corpus pipeline would.
-    * `tokAll` must cover every doc that can appear in a candidate pair
-    * (old + delta) because the exact-Jaccard verify re-tokenizes
-    * CANDIDATE docs only — a duplicate-mass-sized re-read, never
-    * corpus-sized. The candidate set stays UNSTAGED — the verify reads
-    * it once, so its plan is planned once, and the index parquet scan
-    * stays visible in the final plan: the evidence DedupIncrementalSpec
-    * pins that the corpus is never re-signatured on the incremental
-    * path. Returns verified (da, db, da_is_new, n_common, jaccard) —
-    * da the earlier partner, db the delta doc, da_is_new the partner's
-    * delta-vs-indexed provenance. */
-  private[operators] def incrementalPairs(
-      oldKeys: DataFrame, tokAll: DataFrame, newKeys: DataFrame): DataFrame =
-    verifiedPairs(
-      bucketPairs(oldKeys.select(col("doc_id"), col("band_key"), lit(false).as("is_new"))
-        .unionByName(newKeys.select(col("doc_id"), col("band_key"), lit(true).as("is_new")))),
-      tokAll)
+    * its own earlier docs: `oldKeys` is the persisted index relation
+    * (doc_id, band_key), `newKeys` the delta keys ([[signDelta]]: a
+    * local relation, so reading its band keys runs no Spark job). The index is first restricted to the delta's band keys (a
+    * `band_key IN (…)` filter the parquet scan receives), so the one
+    * band_key shuffle moves only the buckets a delta doc is in; each
+    * such bucket keeps EVERY indexed row, so the hot-bucket cap counts
+    * over the combined key set stay exact and the run prunes exactly the
+    * buckets the full-corpus pipeline would (buckets without a delta key
+    * cannot pair a delta doc). An IN list rather than a broadcast
+    * semi-join: the list is 4 keys per delta doc, and a broadcast of a
+    * local relation still costs a Spark job per batch. Returns
+    * (da, db, da_is_new), one row per shared band — da the earlier
+    * partner, db the delta doc, da_is_new the partner's delta-vs-indexed
+    * provenance. */
+  private[operators] def incrementalPairs(oldKeys: DataFrame, newKeys: DataFrame): DataFrame = {
+    val deltaBands = newKeys.select(col("band_key")).collect().map(_.getString(0)).distinct
+    bucketPairs(oldKeys.select(col("doc_id"), col("band_key"), lit(false).as("is_new"))
+      .filter(col("band_key").isin(deltaBands.toSeq: _*))
+      .unionByName(newKeys.select(col("doc_id"), col("band_key"), lit(true).as("is_new"))))
+  }
 
-  /** The delta verdict, one row per duplicate delta doc: its chosen
-    * earlier partner (indexed docs first — by the pair relation's own
-    * da_is_new provenance bit — then lowest doc_id, a deterministic
-    * total order) with the pair's exact-Jaccard evidence. Docs absent
-    * from the output are novel and enter the corpus. */
-  private def incrementalVerdict(pairs: DataFrame): DataFrame =
-    pairs
-      .select(col("db").as("doc_id"),
-        struct(
-          when(col("da_is_new"), lit(1)).otherwise(lit(0)).as("ord"),
-          col("da").as("dup_of"), col("n_common"), col("jaccard")).as("s"))
-      .groupBy(col("doc_id"))
-      .agg(min(col("s")).as("s"))
-      .select(col("doc_id"), col("s.dup_of").as("dup_of"),
+  /** The delta verdict over [[incrementalPairs]], one row per duplicate
+    * delta doc: its chosen earlier partner (indexed docs first — by the
+    * pair's own da_is_new provenance bit — then lowest doc_id, a
+    * deterministic total order) with the pair's exact-Jaccard evidence
+    * ([[overlap]], the scoring [[verifiedPairs]] uses). Docs absent from
+    * the output are novel and enter the corpus.
+    *
+    * The candidates are bounded (delta × bands × [[MaxBucketDocs]]), so
+    * each pair, once per doc it names, is BROADCAST and `docsAll`
+    * (doc_id, text: old + delta, every doc a pair can name) streams
+    * through the hash join — the corpus text is never shuffled, and only
+    * matched docs are split and shingled. One shuffle then groups the
+    * matched rows by delta doc: its own key array beside its partners'.
+    * The partners are scored and the best one kept without a second
+    * shuffle, the rows staying clustered by delta doc. A pair whose doc
+    * is missing from `docsAll` drops. */
+  private def incrementalVerdict(pairs: DataFrame, docsAll: DataFrame): DataFrame = {
+    val pairDocs = pairs.select(struct(col("da"), col("db"), col("da_is_new")).as("p"),
+      explode(array(col("da"), col("db"))).as("doc_id"))
+    val partner = when(col("doc_id") === col("p.da"),
+      struct(col("p.da").as("da"), col("p.da_is_new").as("da_is_new"), col("w").as("w")))
+    val (verified, nCommon, jaccard) = overlap(col("x.w"), col("wb"))
+    tokenizedAtScan(docsAll.join(broadcast(pairDocs), Seq("doc_id")))
+      .select(col("doc_id"), col("p"), shingleKeyArray.as("w"))
+      .groupBy(col("p.db").as("db"))
+      .agg(max(when(col("doc_id") === col("p.db"), col("w"))).as("wb"),
+        collect_list(partner).as("partners"))
+      .select(col("db"), col("wb"), explode(col("partners")).as("x"))
+      .filter(verified)
+      .groupBy(col("db"))
+      .agg(min(struct(when(col("x.da_is_new"), lit(1)).otherwise(lit(0)).as("ord"),
+        col("x.da").as("dup_of"), nCommon.as("n_common"), jaccard.as("jaccard"))).as("s"))
+      .select(col("db").as("doc_id"), col("s.dup_of").as("dup_of"),
         col("s.n_common").as("n_common"), col("s.jaccard").as("jaccard"))
+  }
 
   /** Index-backed twin of the `dedup_incremental` query: band keys of
     * the screened corpus come from a [[buildDedupIndex]] parquet scan
     * instead of being recomputed — output-identical (spec-asserted),
-    * and the only text ever re-read from the old corpus is the
-    * candidate docs' (for the exact verify). */
+    * and only the candidate docs' text is tokenized (the rest streams
+    * past the broadcast candidate join). */
   def incrementalFromIndex(spark: SparkSession, dir: String, indexPath: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     // delta docs are filtered BEFORE tokenization (the deltaIds set is
     // DeltaSample rows by construction — broadcast is provably safe,
-    // §5 bounded-set rule); the verify side is the scan-speed form so
-    // only candidate docs ever tokenize — no corpus-sized cache or
-    // shuffle anywhere in the serving path
-    incrementalVerdict(incrementalPairs(
-      spark.read.parquet(indexPath), tokenizedAtScan(docs),
-      signDelta(docs.join(broadcast(deltaIds(docs)), Seq("doc_id"), "left_semi"))))
+    // §5 bounded-set rule); no corpus-sized cache or shuffle anywhere
+    // in the serving path
+    incrementalVerdict(incrementalPairs(spark.read.parquet(indexPath),
+      signDelta(docs.join(broadcast(deltaIds(docs)), Seq("doc_id"), "left_semi"))), docs)
   }
 
   /** Public delta-screening entry (the continuous-ingestion building
@@ -441,25 +466,23 @@ object Dedup {
     * `delta` docs that near-duplicate an indexed doc or an EARLIER
     * delta doc (arrival order = doc_id within the delta). `oldKeys`
     * is the persisted (doc_id, band_key) index; `corpus` must hold
-    * the indexed docs' (doc_id, text) — only candidate docs' text is
-    * ever read from it (the semi-join prunes the rest). Signs the
-    * delta itself; see the four-argument form to reuse the keys. */
+    * the indexed docs' (doc_id, text). Signs the delta itself; see the
+    * four-argument form to reuse the keys. */
   def screenDelta(oldKeys: DataFrame, corpus: DataFrame, delta: DataFrame): DataFrame =
     screenDelta(oldKeys, corpus, delta, signDelta(delta))
 
   /** [[screenDelta]] over delta keys the caller already signed with
-    * [[signDelta]] — so an ingest batch can write the same staged keys,
-    * minus its duplicates, as its index partition. One signature pass,
-    * one band_key shuffle for the candidates, one array row per
-    * candidate doc for the verify. */
+    * [[signDelta]] — so an ingest batch can write the same keys, minus
+    * its duplicates, as its index partition. Work per batch is bounded
+    * by the delta, not the state: the index is filtered to the delta's
+    * band keys before the one band_key shuffle, and the corpus is read
+    * once, unshuffled, through the broadcast candidate join (only
+    * candidate docs are split and shingled). */
   def screenDelta(oldKeys: DataFrame, corpus: DataFrame, delta: DataFrame,
-      deltaKeys: DataFrame): DataFrame = {
-    // scan-speed verify side (see tokenizedAtScan): only candidate
-    // docs' text is ever tokenized from the corpus
-    val tokAll = tokenizedAtScan(corpus.select(col("doc_id"), col("text"))
-      .unionByName(delta.select(col("doc_id"), col("text"))))
-    incrementalVerdict(incrementalPairs(oldKeys, tokAll, deltaKeys))
-  }
+      deltaKeys: DataFrame): DataFrame =
+    incrementalVerdict(incrementalPairs(oldKeys, deltaKeys),
+      corpus.select(col("doc_id"), col("text"))
+        .unionByName(delta.select(col("doc_id"), col("text"))))
 
   /** Resolve verified pairs into duplicate clusters by iterative
     * min-label propagation over the (bidirected) pair edges — a fixed
@@ -884,8 +907,9 @@ object Dedup {
     // delta batch (the fixed deltaIds sample here; a real run passes
     // its own) is screened against the already-deduplicated corpus via
     // the persisted band-key index — signature work ∝ DELTA, candidate
-    // join ∝ index size, verify ∝ duplicate mass; the corpus text is
-    // never re-tokenized except for candidate docs. Oracle: the full-
+    // shuffle ∝ the index buckets the delta touches, verify ∝ duplicate
+    // mass; the corpus text is never shuffled, and only candidate docs
+    // are re-tokenized. Oracle: the full-
     // corpus pair relation restricted to delta-involving pairs with
     // the same arrival-order direction, best partner per delta doc.
     QueryDef(

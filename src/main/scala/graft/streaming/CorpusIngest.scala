@@ -4,7 +4,8 @@ import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import scala.collection.immutable.ListMap
 
 /** Continuous corpus ingestion with ONLINE near-dedup — the streaming
   * closure of the L2c incremental-dedup loop: every micro-batch of
@@ -37,51 +38,62 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * either way. */
 object CorpusIngest {
 
+  /** The state tables and their columns as [[ingestBatch]] writes them
+    * (`batch_id` is the partition column). Every read of engine-owned
+    * state uses these, so no read pays a parquet schema-inference job. */
+  private[graft] val StateTables: ListMap[String, StructType] = ListMap(
+    "corpus" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType))),
+    "index" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("band_key", StringType))),
+    "dups" -> StructType(Seq(
+      StructField("doc_id", LongType), StructField("dup_of", LongType),
+      StructField("n_common", LongType), StructField("jaccard", DoubleType))))
+
   /** Apply one micro-batch to the dedup state — deterministic and
     * idempotent per (batch rows, batchId). Public so a batch backfill
     * can drive the exact same code path as the stream.
     *
     * Each batch is signed ONCE: [[graft.operators.Dedup.signDelta]]
-    * stages the delta's band keys, [[graft.operators.Dedup.screenDelta]]
-    * screens them against the prior index (one band_key shuffle for
-    * candidates, one shingle-key array per candidate doc for the
-    * verify), and the same staged keys minus the duplicates become
-    * `index/batch_id=N` — row-identical to a
-    * [[graft.operators.Dedup.buildDedupIndex]] of `corpus/batch_id=N`
-    * (spec-asserted), without re-reading and re-signing it. Engine-owned
-    * state is read with the schema the engine wrote, so no read pays a
-    * parquet schema-inference job, and nothing is cached: the only
-    * materialization is the delta keys' localCheckpoint, which Spark's
-    * cleaner frees once the batch drops it. */
+    * collects the delta's band keys into a local relation,
+    * [[graft.operators.Dedup.screenDelta]] screens them against the
+    * prior state with work bounded by the batch (the index restricted to
+    * the delta's band keys before the one band_key shuffle; the prior
+    * corpus streamed once, unshuffled, through a broadcast join with the
+    * candidate pairs, only candidate docs tokenized). The dup ids — at
+    * most the batch's docs — are collected once from the written `dups`
+    * partition, and the corpus and index partitions are the batch and
+    * its local keys minus those ids: `index/batch_id=N` is
+    * row-identical to a [[graft.operators.Dedup.buildDedupIndex]] of
+    * `corpus/batch_id=N` (spec-asserted), written as one file without
+    * re-reading or re-signing anything. State is read with
+    * [[StateTables]]' schemas, and nothing is cached. */
   def ingestBatch(batch: DataFrame, batchId: Long, statePath: String): Unit = {
     val spark = batch.sparkSession
     val docs = batch.select(col("doc_id"), col("text"))
 
-    def priorState(sub: String, schema: StructType): DataFrame = {
+    def priorState(sub: String): DataFrame = {
       val root = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(root))
-        spark.read.schema(schema.add("batch_id", LongType)).parquet(root.toString)
+        spark.read.schema(StateTables(sub).add("batch_id", LongType)).parquet(root.toString)
           .filter(col("batch_id") < batchId).drop("batch_id")
-      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), StateTables(sub))
     }
 
-    val corpus = priorState("corpus", docs.schema)
-    val oldKeys = priorState("index",
-      StructType(Seq(docs.schema("doc_id"), StructField("band_key", StringType))))
-
     val keys = Dedup.signDelta(docs)
-    val dups = Dedup.screenDelta(oldKeys, corpus, docs, keys)
     val dupsPath = s"$statePath/dups/batch_id=$batchId"
-    dups.write.mode("overwrite").parquet(dupsPath)
+    Dedup.screenDelta(priorState("index"), priorState("corpus"), docs, keys)
+      .write.mode("overwrite").parquet(dupsPath)
 
-    // the verdict is read back from its own materialized partition
-    // (never re-planned) for both anti-joins below
-    val dupIds = spark.read.schema(dups.schema).parquet(dupsPath).select(col("doc_id"))
-    docs.join(dupIds, Seq("doc_id"), "left_anti")
+    // read back from the materialized partition, never re-planned
+    val dupIds = spark.read.schema(StateTables("dups")).parquet(dupsPath)
+      .select(col("doc_id")).collect().map(_.getLong(0))
+    val novel = !col("doc_id").isin(dupIds.toSeq: _*)
+    docs.filter(novel)
       .write.mode("overwrite").parquet(s"$statePath/corpus/batch_id=$batchId")
-    Dedup.writeIndex(keys.join(dupIds, Seq("doc_id"), "left_anti"),
-      s"$statePath/index/batch_id=$batchId")
+    keys.filter(novel).coalesce(1)
+      .write.mode("overwrite").parquet(s"$statePath/index/batch_id=$batchId")
   }
 
   /** Compact accumulated `batch_id` partitions — the small-files
@@ -95,7 +107,9 @@ object CorpusIngest {
     * exactly the state its first attempt saw. Any `upTo` at most the
     * latest COMMITTED batch is safe: Spark only ever replays the
     * batch after the last committed one, and that replay reads
-    * `batch_id < upTo + 1` — the compacted partition verbatim.
+    * `batch_id < upTo + 1` — the compacted partition verbatim. The
+    * partitions are read with the [[StateTables]] schemas (no
+    * schema-inference job) and rewritten without a shuffle.
     *
     * Crash discipline (r9 — the Warehouse SwapJournal argument applied
     * to directory swaps; the pre-r9 form could rebuild the tmp from a
@@ -124,7 +138,7 @@ object CorpusIngest {
     * with ANY `upTo` after any crash converges. */
   def compactState(spark: org.apache.spark.sql.SparkSession, statePath: String,
       upTo: Long, targetFiles: Int = 1): Unit =
-    Seq("corpus", "index", "dups").foreach { sub =>
+    StateTables.foreach { case (sub, schema) =>
       val root = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(root)) {
@@ -138,8 +152,13 @@ object CorpusIngest {
           }
         recoverSwaps(fs, root)
         if (olds().size > 1) {
-          spark.read.parquet(olds().map(_.toString): _*)
-            .repartition(targetFiles)
+          // coalesce, not repartition (the trade Sinks.appendParquetSized
+          // makes the other way): the producing side is a plain scan of
+          // the partitions being collapsed, so fusing it into the writer
+          // costs only read parallelism, where a repartition would
+          // shuffle the whole compacted state; at most targetFiles files
+          spark.read.schema(schema).parquet(olds().map(_.toString): _*)
+            .coalesce(targetFiles)
             .write.mode("overwrite").parquet(tmp.toString)
           fs.create(marker, true).close() // commit point: tmp is authoritative
           olds().foreach(p => fs.delete(p, true))
@@ -202,7 +221,7 @@ object CorpusIngest {
     * set that a raw read would silently miss rows from). */
   private[graft] def recoverState(
       spark: org.apache.spark.sql.SparkSession, statePath: String): Unit =
-    Seq("corpus", "index", "dups").foreach { sub =>
+    StateTables.foreach { case (sub, _) =>
       val root = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       if (fs.exists(root)) recoverSwaps(fs, root)
@@ -243,7 +262,7 @@ object CorpusIngest {
         compactState(spark, statePath, upTo = batchId - 1, targetFiles)
       } else {
         recoverState(spark, statePath)
-        Seq("corpus", "index", "dups").foreach { sub =>
+        StateTables.foreach { case (sub, _) =>
           val root = new org.apache.hadoop.fs.Path(s"$statePath/$sub")
           val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
           if (fs.exists(root)) {
